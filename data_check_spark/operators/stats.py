@@ -25,6 +25,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,6 +38,11 @@ _NUMERIC = (
     T.FloatType, T.DoubleType, T.DecimalType,
 )
 
+
+VERDICT_SCHEMA = (
+    "partition string, column string, check string, "
+    "metric double, threshold double, passed boolean"
+)
 
 ALL_METRICS = frozenset({"n_distinct", "min_max", "mean_stddev"})
 # avg_tokens is opt-in even in ALL mode: it tokenizes the whole string
@@ -196,11 +203,11 @@ def partition_stats_pass(
     scans when stats are already being computed.
 
     Returns a SMALL frame (one row per partition): (partition,
-    _m array<struct metrics>, _h_<kind> array<bigint> per hist,
-    _xn/_x_<name> per expr predicate).
-    Callers persist it and derive verdicts (verdicts_from_pass),
-    drift profiles (numeric_profiles_from_pass) and the partition
-    list from it without touching the table again.
+    _m array<struct metrics> when any column is thresholded,
+    _h_<kind> array<bigint> per hist, _xn/_x_<name> per expr
+    predicate). Callers collect it and derive verdicts
+    (stats_verdict_rows), drift profiles and the partition list from
+    the rows without touching the table again.
 
     Bucket ids are projected as columns BEFORE the aggregation —
     count_if(bucket == i) across n_buckets aggregates must compare an
@@ -251,8 +258,9 @@ def partition_stats_pass(
 
         base = base.select("*", row_hash(fingerprint_cols).alias("_fph"))
         fp_aggs = [F.count(F.lit(1)).alias("_fpn"), *lane_sum_aggs("_fph", "_fp")]
+    metric_aggs = [F.array(*structs).alias("_m")] if structs else []
     return base.groupBy(part.alias("partition")).agg(
-        F.array(*structs).alias("_m"), *hist_aggs, *expr_aggs, *fp_aggs
+        *metric_aggs, *hist_aggs, *expr_aggs, *fp_aggs
     )
 
 
@@ -287,47 +295,6 @@ def exact_distinct_counts(
     return out
 
 
-def verdicts_from_pass(
-    pass_df: DataFrame, thresholds: dict[str, dict[str, float]]
-) -> DataFrame:
-    """Threshold verdicts from a partition_stats_pass frame (no table
-    scan — operates on one row per partition)."""
-    per_part = (
-        pass_df.select("partition", F.explode("_m").alias("m")).select("partition", "m.*")
-    )
-    return _verdicts_from_per_part(per_part, thresholds)
-
-
-def numeric_profiles_from_pass(
-    pass_df: DataFrame,
-    numeric_hists: dict[str, tuple[Column | str, float, float, int]],
-) -> DataFrame:
-    """Global numeric drift profiles (kind, key, n, freq) by summing
-    the per-partition bucket arrays — same output contract as
-    drift_profile's numeric kinds (zero buckets absent, so PSI's
-    epsilon floor applies identically)."""
-    profs = None
-    for name in numeric_hists:
-        h = pass_df.select(F.posexplode(F.col(f"_h_{name}")).alias("pos", "cnt"))
-        counts = (
-            h.groupBy("pos")
-            .agg(F.sum("cnt").alias("n"))
-            .filter(F.col("n") > 0)
-            .select(
-                F.lit(name).alias("kind"),
-                F.col("pos").cast("string").alias("key"),
-                "n",
-            )
-        )
-        profs = counts if profs is None else profs.unionByName(counts)
-    totals = profs.groupBy("kind").agg(F.sum("n").alias("_total"))
-    return (
-        profs.join(F.broadcast(totals), "kind")
-        .withColumn("freq", F.col("n").cast("double") / F.col("_total"))
-        .drop("_total")
-    )
-
-
 def partition_stats_verdicts(
     df: DataFrame,
     partition_col: Column | str,
@@ -337,9 +304,11 @@ def partition_stats_verdicts(
     """Per-partition pass/fail verdict rows (the north-rule spine).
 
     One ``groupBy(partition).agg(...)`` pass computes every column's
-    metrics per partition; thresholds turn metrics into verdicts.
-    ``thresholds``: {column: {"max_null_rate": x, "min_distinct": k,
-    "min_rows": r}} — missing keys are not checked.
+    metrics per partition (collected: one row per partition);
+    thresholds turn metrics into verdicts driver-side
+    (``stats_verdict_rows``). ``thresholds``: {column:
+    {"max_null_rate": x, "min_distinct": k, "min_rows": r}} — missing
+    keys are not checked.
 
     Output: one row per (partition, column, check) with columns
     (partition, column, check, metric, threshold, passed), plus one
@@ -348,146 +317,71 @@ def partition_stats_verdicts(
     parallelism: all values are exact-or-sketch aggregates of the
     partition's rows, independent of task layout.
     """
-    return verdicts_from_pass(
-        partition_stats_pass(df, partition_col, thresholds, approx), thresholds
+    threshold_rules(thresholds)
+    rows = partition_stats_pass(df, partition_col, thresholds, approx).collect()
+    return df.sparkSession.createDataFrame(
+        stats_verdict_rows([r.asDict(recursive=True) for r in rows], thresholds),
+        VERDICT_SCHEMA,
     )
 
 
-def _verdicts_from_per_part(
-    per_part: DataFrame, thresholds: dict[str, dict[str, float]]
-) -> DataFrame:
-    checks = []
-    for col, th in thresholds.items():
-        base = per_part.filter(F.col("column") == col)
-        if "max_null_rate" in th:
-            checks.append(
-                base.select(
-                    "partition",
-                    "column",
-                    F.lit("max_null_rate").alias("check"),
-                    F.col("null_rate").alias("metric"),
-                    F.lit(float(th["max_null_rate"])).alias("threshold"),
-                    (F.col("null_rate") <= th["max_null_rate"]).alias("passed"),
-                )
-            )
-        if "min_distinct" in th:
-            checks.append(
-                base.select(
-                    "partition",
-                    "column",
-                    F.lit("min_distinct").alias("check"),
-                    F.col("n_distinct").cast("double").alias("metric"),
-                    F.lit(float(th["min_distinct"])).alias("threshold"),
-                    (F.col("n_distinct") >= th["min_distinct"]).alias("passed"),
-                )
-            )
-        if "min_avg_tokens" in th:
-            checks.append(
-                base.select(
-                    "partition",
-                    "column",
-                    F.lit("min_avg_tokens").alias("check"),
-                    F.col("avg_tokens").alias("metric"),
-                    F.lit(float(th["min_avg_tokens"])).alias("threshold"),
-                    # fail-closed like avg_bytes/quantiles: a NULL
-                    # metric (all-NULL texts, or the threshold aimed
-                    # at a non-string column) must FAIL the gate
-                    F.coalesce(
-                        F.col("avg_tokens") >= th["min_avg_tokens"], F.lit(False)
-                    ).alias("passed"),
-                )
-            )
-        if "max_avg_tokens" in th:
-            # was accepted by _needed_metrics but silently unchecked
-            checks.append(
-                base.select(
-                    "partition",
-                    "column",
-                    F.lit("max_avg_tokens").alias("check"),
-                    F.col("avg_tokens").alias("metric"),
-                    F.lit(float(th["max_avg_tokens"])).alias("threshold"),
-                    F.coalesce(
-                        F.col("avg_tokens") <= th["max_avg_tokens"], F.lit(False)
-                    ).alias("passed"),
-                )
-            )
-        if "min_avg_bytes" in th:
-            checks.append(
-                base.select(
-                    "partition",
-                    "column",
-                    F.lit("min_avg_bytes").alias("check"),
-                    F.col("avg_bytes").alias("metric"),
-                    F.lit(float(th["min_avg_bytes"])).alias("threshold"),
-                    # all-NULL column -> NULL avg fails closed
-                    F.coalesce(
-                        F.col("avg_bytes") >= th["min_avg_bytes"], F.lit(False)
-                    ).alias("passed"),
-                )
-            )
-        if "max_avg_bytes" in th:
-            checks.append(
-                base.select(
-                    "partition",
-                    "column",
-                    F.lit("max_avg_bytes").alias("check"),
-                    F.col("avg_bytes").alias("metric"),
-                    F.lit(float(th["max_avg_bytes"])).alias("threshold"),
-                    F.coalesce(
-                        F.col("avg_bytes") <= th["max_avg_bytes"], F.lit(False)
-                    ).alias("passed"),
-                )
-            )
-        for q in ("p50", "p90", "p99"):
-            if f"min_{q}" in th:
-                bound = float(th[f"min_{q}"])
-                checks.append(
-                    base.select(
-                        "partition",
-                        "column",
-                        F.lit(f"min_{q}").alias("check"),
-                        F.col(q).alias("metric"),
-                        F.lit(bound).alias("threshold"),
-                        # NULL sketch (all-NULL / non-numeric) fails closed
-                        F.coalesce(F.col(q) >= bound, F.lit(False)).alias("passed"),
-                    )
-                )
-            if f"max_{q}" in th:
-                bound = float(th[f"max_{q}"])
-                checks.append(
-                    base.select(
-                        "partition",
-                        "column",
-                        F.lit(f"max_{q}").alias("check"),
-                        F.col(q).alias("metric"),
-                        F.lit(bound).alias("threshold"),
-                        F.coalesce(F.col(q) <= bound, F.lit(False)).alias("passed"),
-                    )
-                )
-        if "min_rows" in th:
-            checks.append(
-                base.select(
-                    "partition",
-                    "column",
-                    F.lit("min_rows").alias("check"),
-                    F.col("n_rows").cast("double").alias("metric"),
-                    F.lit(float(th["min_rows"])).alias("threshold"),
-                    (F.col("n_rows") >= th["min_rows"]).alias("passed"),
-                )
-            )
-    if not checks:
+# threshold key -> (metric field, comparison); min_<q>/max_<q> for
+# the p50/p90/p99 quantiles
+_RULES = {
+    "max_null_rate": ("null_rate", operator.le),
+    "min_distinct": ("n_distinct", operator.ge),
+    "min_avg_tokens": ("avg_tokens", operator.ge),
+    "max_avg_tokens": ("avg_tokens", operator.le),
+    "min_avg_bytes": ("avg_bytes", operator.ge),
+    "max_avg_bytes": ("avg_bytes", operator.le),
+    **{
+        f"{bound}_{q}": (q, op)
+        for q in ("p50", "p90", "p99")
+        for bound, op in (("min", operator.ge), ("max", operator.le))
+    },
+    "min_rows": ("n_rows", operator.ge),
+}
+
+
+def threshold_rules(thresholds: dict[str, dict[str, float]]) -> list[tuple]:
+    """(column, check, metric field, comparison, bound) per configured
+    threshold; raises when there is none."""
+    rules = [
+        (col, check, fld, op, float(th[check]))
+        for col, th in thresholds.items()
+        for check, (fld, op) in _RULES.items()
+        if check in th
+    ]
+    if not rules:
         raise ValueError("no thresholds given")
-    verdicts = checks[0]
-    for c in checks[1:]:
-        verdicts = verdicts.unionByName(c)
-    summary = verdicts.groupBy("partition").agg(
-        F.lit("*").alias("column"),
-        F.lit("all").alias("check"),
-        F.count_if(~F.col("passed")).cast("double").alias("metric"),
-        F.lit(0.0).alias("threshold"),
-        (F.count_if(~F.col("passed")) == 0).alias("passed"),
-    )
-    return verdicts.unionByName(summary.select(verdicts.columns))
+    return rules
+
+
+def stats_verdict_rows(
+    pass_rows: list[dict], thresholds: dict[str, dict[str, float]]
+) -> list[tuple]:
+    """Threshold verdict rows, as plain Python tuples, from collected
+    ``partition_stats_pass`` rows (dicts with ``partition`` and the
+    ``_m`` metric structs): one row per (partition, column, check)
+    plus each partition's (column='*', check='all') summary, whose
+    metric is its number of failed checks.
+
+    A NULL metric FAILS (a binary column's n_distinct, an all-NULL
+    column's avg_bytes, a non-numeric column's quantile). A NaN metric
+    compares as Spark orders it: above every number."""
+    rules = threshold_rules(thresholds)
+    out = []
+    for row in pass_rows:
+        metrics = {m["column"]: m for m in row["_m"]}
+        rows = []
+        for col, check, fld, op, bound in rules:
+            m = metrics[col][fld]
+            m = None if m is None else float(m)
+            ok = m is not None and (op(m, bound) if m == m else op is operator.ge)
+            rows.append((row["partition"], col, check, m, bound, ok))
+        failed = sum(not r[5] for r in rows)
+        out += rows + [(row["partition"], "*", "all", float(failed), 0.0, failed == 0)]
+    return out
 
 
 def iqr_outlier_counts(

@@ -44,7 +44,7 @@ property.
 ref parity: the reference validates after the table lands — a second
 full read of data it just wrote (data_processor.py run loop). Riding
 the write is the Spark-native upgrade: same verdict-row contract
-(VERDICT_COLS) at write time, for free.
+at write time, for free.
 """
 from __future__ import annotations
 
@@ -54,22 +54,10 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_check_spark.operators.stats import (
+    VERDICT_SCHEMA,
     _metric_struct,
     _needed_metrics,
-    _verdicts_from_per_part,
-)
-
-# per-column metric struct fields, matching operators/stats._metric_struct
-_PER_PART_SCHEMA = (
-    "partition string, column string, n_rows bigint, n_null bigint, "
-    "null_rate double, n_distinct bigint, min_value string, "
-    "max_value string, mean double, stddev double, avg_tokens double, "
-    "avg_bytes double, p50 double, p90 double, p99 double"
-)
-_STRUCT_FIELDS = (
-    "column", "n_rows", "n_null", "null_rate", "n_distinct", "min_value",
-    "max_value", "mean", "stddev", "avg_tokens", "avg_bytes",
-    "p50", "p90", "p99",
+    stats_verdict_rows,
 )
 
 
@@ -100,49 +88,11 @@ class ObservedSuite:
     _col_approx: dict = field(init=False, default_factory=dict)
 
     def __post_init__(self) -> None:
-        from data_check_spark.plans.suite import ExprCheck, StatsCheck
-
+        # each check kind says whether and how it rides an observation
+        # (Check.observe): stats thresholds and expr predicates do,
+        # kinds needing a shuffle raise
         for chk in self.suite.checks:
-            if isinstance(chk, StatsCheck):
-                overlap = set(self._thresholds) & set(chk.thresholds)
-                if overlap:
-                    raise ValueError(
-                        f"duplicate stat thresholds for columns {sorted(overlap)}"
-                    )
-                self._thresholds.update(chk.thresholds)
-                # approx is PER CHECK: remember it per column so a
-                # later StatsCheck's flag cannot silently flip an
-                # earlier check's columns (order-dependence)
-                for c in chk.thresholds:
-                    self._col_approx[c] = chk.approx
-                if not chk.approx and any(
-                    "min_distinct" in th for th in chk.thresholds.values()
-                ):
-                    # countDistinct is a DISTINCT aggregate — Spark
-                    # rejects it in observed metrics
-                    # (INVALID_OBSERVED_METRICS...DISTINCT_UNSUPPORTED)
-                    raise ValueError(
-                        "exact distinct (approx=False + min_distinct) is a "
-                        "DISTINCT aggregate and cannot ride an observation; "
-                        "use approx=True (HLL) or the batch suite"
-                    )
-                if chk.exact_distinct:
-                    # the two-key exact-distinct pre-aggregation is a
-                    # shuffle — not expressible as an observation
-                    raise ValueError(
-                        "StatsCheck.exact_distinct needs a shuffle and cannot "
-                        "ride an observation; use approx (HLL) distinct here "
-                        "or the batch suite"
-                    )
-            elif isinstance(chk, ExprCheck):
-                if any(c.name == chk.name for c in self._expr_checks):
-                    raise ValueError(f"duplicate expr check name {chk.name!r}")
-                self._expr_checks.append(chk)
-            else:
-                raise ValueError(
-                    f"{type(chk).__name__} needs its own shuffle/scan and "
-                    "cannot ride an observation — run it in the batch suite"
-                )
+            chk.observe(self)
         if not self._thresholds and not self._expr_checks:
             raise ValueError("no observable checks in suite")
 
@@ -190,43 +140,29 @@ class ObservedSuite:
 
     # ------------------------------------------------------------------
     def verdicts(self, spark: SparkSession, metrics) -> DataFrame:
-        """Verdict rows (VERDICT_COLS contract, ``partition='*'``)
-        from an ``Observation`` or a plain observed-metrics dict.
+        """Verdict rows (the batch suite's verdict schema,
+        ``partition='*'``) from an ``Observation`` or a plain
+        observed-metrics dict.
 
-        Pure driver math over the handful of observed values — the
-        ONLY Spark work is materializing ≤ (|columns|·|thresholds| +
-        |expr checks| + 1) literal rows. Stats thresholds reuse the
-        batch ``_verdicts_from_per_part`` (identical pass/fail
-        semantics, including fail-closed NULL handling and the
+        Pure driver math over the handful of observed values, returned
+        as one local relation. Stats thresholds reuse the batch
+        ``stats_verdict_rows`` (identical pass/fail semantics,
+        including fail-closed NULL handling and the
         ``column='*'``/``check='all'`` summary row); expr verdicts
-        mirror the batch suite's driver-side ratio rows.
+        mirror the batch suite's ratio rows.
         """
         if isinstance(metrics, Observation):
             metrics = metrics.get
-        frames: list[DataFrame] = []
+        rows: list[tuple] = []
         if self._thresholds:
-            rows = []
-            for m in metrics["_m"]:
-                d = m.asDict() if hasattr(m, "asDict") else dict(m)
-                rows.append(tuple([("*")] + [d[f] for f in _STRUCT_FIELDS]))
-            per_part = spark.createDataFrame(rows, _PER_PART_SCHEMA)
-            frames.append(_verdicts_from_per_part(per_part, self._thresholds))
-        if self._expr_checks:
+            structs = [m.asDict() if hasattr(m, "asDict") else dict(m) for m in metrics["_m"]]
+            rows += stats_verdict_rows([{"partition": "*", "_m": structs}], self._thresholds)
+        for chk in self._expr_checks:
             n = metrics["_xn"]
-            erows = []
-            for chk in self._expr_checks:
-                ratio = metrics[f"_x_{chk.name}"] / n if n else None
-                erows.append((
-                    "*", chk.name, "expr",
-                    ratio, float(chk.max_violation_ratio),
-                    ratio is not None and ratio <= chk.max_violation_ratio,
-                ))
-            frames.append(spark.createDataFrame(
-                erows,
-                "partition string, column string, check string, "
-                "metric double, threshold double, passed boolean",
+            ratio = metrics[f"_x_{chk.name}"] / n if n else None
+            rows.append((
+                "*", chk.name, "expr",
+                ratio, float(chk.max_violation_ratio),
+                ratio is not None and ratio <= chk.max_violation_ratio,
             ))
-        out = frames[0]
-        for f_ in frames[1:]:
-            out = out.unionByName(f_)
-        return out
+        return spark.createDataFrame(rows, VERDICT_SCHEMA)

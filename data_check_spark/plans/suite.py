@@ -9,6 +9,25 @@ its key performance idea: the fused single-pass aggregation
 (``processors/bigquery.py:207-224``) — all stats thresholds for all
 columns cost ONE groupBy(partition) pass over the table.
 
+Each check kind is one class in ``plans/checks.py`` and contributes
+everything the suite does for it: its ``scope`` (partition-scoped or
+global under ``run_resumable``), the key its verdicts and violation
+dumps are named by (with its duplicate-key error), its share of the
+shared fused passes (stats aggregates, ``count_if`` predicates,
+fingerprint columns, numeric histograms, drift-profile kinds), the
+bounded Phase-1 actions it submits, its verdict rows as plain Python
+tuples, and its lazy violation frames. Adding a check kind means
+writing one class; ``run()`` is one planner plus one loop:
+
+1. plan — reject unknown check types, gather every check's share of
+   the fused passes, guard duplicate keys. No Spark job runs yet.
+2. Phase 1 — submit the shared passes' and every check's bounded
+   actions to one thread pool, so their job latencies overlap.
+3. Phase 2 — each check turns the collected results into verdict rows
+   in plain Python. The rows are sorted by (partition, check, column)
+   with None first (Spark's ascending order) and returned as one local
+   relation; violation frames stay lazy.
+
 Uniform verdict schema:
     (partition string, column string, check string,
      metric double, threshold double, passed boolean)
@@ -21,512 +40,44 @@ by key, so outputs are identical at local[8] and local[32].
 from __future__ import annotations
 
 import uuid
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Callable
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_check_spark.operators.drift import psi_categorical, psi_numeric
-from data_check_spark.operators.stats import partition_stats_verdicts
+from data_check_spark.operators.drift import drift_profile
+from data_check_spark.operators.stats import VERDICT_SCHEMA
 from data_check_spark.plans.audit import write_audit
+from data_check_spark.plans.checks import (  # noqa: F401  (the suite's public check kinds)
+    CategoricalDriftCheck,
+    Check,
+    CompareCheck,
+    ExprCheck,
+    FingerprintCheck,
+    FunctionalDependencyCheck,
+    KSDigestDriftCheck,
+    KSDriftCheck,
+    LineDupCheck,
+    LMCheck,
+    NearDupCheck,
+    NumericDriftCheck,
+    ProfileCheck,
+    ReferentialCheck,
+    RepetitionCheck,
+    Run,
+    SchemaCheck,
+    StatsCheck,
+    UniquenessCheck,
+)
 from data_check_spark.plans.manifest import Manifest
 
-VERDICT_COLS = ["partition", "column", "check", "metric", "threshold", "passed"]
 
-
-def _union_all(frames: list[DataFrame]) -> DataFrame | None:
-    if not frames:
-        return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-@dataclass
-class StatsCheck:
-    """Per-column stat thresholds, all computed in one fused pass."""
-    thresholds: dict[str, dict[str, float]]
-    approx: bool = True
-    # columns whose n_distinct is computed EXACTLY via a two-key
-    # (partition, value) pre-aggregation instead of an HLL sketch.
-    # Recommended for low-cardinality columns (lang: ~20 values): the
-    # map-side combine collapses the shuffle to |values| x |partitions|
-    # rows, and the per-row HLL buffer update was measured costlier
-    # than the plain hash-agg at both parallelism levels (4.9s@32 /
-    # 9.4s@8 marginal vs 1.7s/1.9s for the two-key aggregation on 20M
-    # pages). High-cardinality columns should stay on HLL — the
-    # two-key shuffle grows with the distinct count.
-    exact_distinct: tuple = ()
-
-
-@dataclass
-class UniquenessCheck:
-    key: str
-    max_duplicate_keys: int = 0
-    violation_limit: int = 500  # ref bigquery.py:105
-    # the duplicate-hash candidate set is bounded only by the table's
-    # duplicate RATE — on a high-duplicate table (exactly what this
-    # check hunts) broadcasting it can exceed the 8GB broadcast /
-    # driver-memory limit and fail the job. Set False there: the probe
-    # falls back to a shuffled join (slower on the common low-duplicate
-    # case, measured; safe on the pathological one).
-    broadcast_candidates: bool = True
-
-
-@dataclass
-class FunctionalDependencyCheck:
-    """Per-partition functional-dependency gate: every value of
-    ``determinant`` must map to exactly one distinct combination of
-    ``dependents`` within the partition — the BASELINE.json per-row
-    invariant (byte-identical extracted text per url) as a declarative
-    check: ``FunctionalDependencyCheck("url", ("text",))``.
-
-    Verdict metric = number of violating determinant values in the
-    partition (check name ``fd``); violations dump (key
-    ``fd:{determinant}``) = (partition, key_value, n_variants,
-    n_rows), sorted, capped. NULL-dependent combinations count as ONE
-    variant (byte-identical means "both NULL or both equal").
-
-    Plan = the same two-phase hash-candidate shape as UniquenessCheck:
-    phase 1 shuffles (partition, xxhash64(det), xxhash64(deps)) — two
-    8-byte hashes, never url/text bytes — and keeps determinant hashes
-    with >1 distinct dependent hash; phase 2 re-scans only rows whose
-    hash is a candidate (left-semi, broadcast by default — the set is
-    bounded by the violation rate; set ``broadcast_candidates=False``
-    on a high-violation table) and recounts BY VALUE, so a determinant
-    hash collision can never fabricate a violation. One-sided caveat:
-    two distinct dependent values colliding under xxhash64 *within one
-    determinant group* would mask that group in phase 1 (~2^-64 per
-    pair). Partition-scoped → resumes like stats/uniqueness."""
-    determinant: str
-    dependents: tuple[str, ...] | list
-    max_violating_keys: int = 0
-    violation_limit: int = 500  # ref bigquery.py:105
-    broadcast_candidates: bool = True
-
-
-@dataclass
-class ReferentialCheck:
-    name: str
-    fact_key: Callable[[], Column] | str
-    dim: Callable[[SparkSession], DataFrame]
-    dim_key: str
-    max_violation_rows: int = 0
-    # True = always broadcast the dim-key set (explicit override),
-    # False = never, 'auto' (default) = only when Catalyst's size
-    # estimate is ≤ refint.AUTO_BROADCAST_CAP_BYTES, else leave the
-    # join unhinted for AQE's runtime decision (see
-    # operators/refint.maybe_broadcast)
-    broadcast: bool | str = "auto"
-    # anti-join on xxhash64(key) surrogates: the dim build side
-    # carries 8 B/key instead of the raw key (~10× higher broadcast
-    # ceiling for url-keyed snapshots) at a 64-bit-collision-bounded
-    # false-negative rate; see operators/refint.referential_violations
-    hash_keys: bool = False
-    # retained for API compatibility; the current engine aggregates the
-    # fact side to (partition, ref_key) counts before the anti-join,
-    # which is cheaper than riding the uniqueness exchange was (the
-    # derived path forced the uniqueness shuffle to carry full key
-    # strings; 8-byte hash keys + an independent pre-aggregated refint
-    # scan measured faster at both parallelism levels)
-    derived_from_key: str | None = None
-    # 'join' (default): exact anti-join of the per-key aggregate —
-    # that aggregate's shuffle carries every DISTINCT fact key, which
-    # for a url-keyed fact table is the whole key set. 'bloom': the
-    # fail-fast gate (operators/bloom.py) — dim keys become a
-    # broadcast Bloom bitmap, bloom-negative fact rows are CERTIFIED
-    # violations caught map-only, and only violating rows enter the
-    # census shuffle (mass ∝ violations, not table size). Verdict
-    # semantics under 'bloom': a FAIL is certain (precision 1.0, every
-    # flagged key truly absent); a PASS may miss an expected `fpp`
-    # fraction of violating keys — the gate direction a fail-fast
-    # check wants. hash_keys/broadcast are ignored in bloom mode.
-    mode: str = "join"
-    fpp: float = 1e-3
-    # bloom mode amortization: a prebuilt operators/bloom.KeyBloom
-    # (Python API) or a .npz path from KeyBloom.save (declarable in
-    # JSON config) — built once per dimension snapshot, every
-    # validation run against that snapshot then skips the build jobs
-    bloom: object | None = None
-    bloom_path: str | None = None
-
-
-@dataclass
-class CategoricalDriftCheck:
-    column: str
-    max_psi: float = 0.2
-    reference: Callable[[SparkSession], DataFrame] | None = None
-
-
-@dataclass
-class NumericDriftCheck:
-    name: str
-    expr: Callable[[], Column]
-    lo: float
-    hi: float
-    n_buckets: int = 50
-    max_psi: float = 0.2
-    reference: Callable[[SparkSession], DataFrame] | None = None
-
-
-@dataclass
-class KSDriftCheck:
-    """Kolmogorov-Smirnov drift over a fixed-width histogram of a
-    numeric expression (north rule: "PSI/KS over t-digest/histograms").
-    Fused like NumericDriftCheck: the df-side histogram rides the
-    stats pass, the reference side rides the shared profile scan, and
-    the KS statistic (max |CDF1-CDF2| over bucket edges, resolution =
-    bucket width — matching operators/drift.ks_statistic) is computed
-    driver-side from the collected profiles."""
-    name: str
-    expr: Callable[[], Column]
-    lo: float
-    hi: float
-    n_buckets: int = 50
-    max_ks: float = 0.2
-    reference: Callable[[SparkSession], DataFrame] | None = None
-
-
-@dataclass
-class KSDigestDriftCheck:
-    """KS drift over per-version t-digests (the north rule's 'KS over
-    t-digest histograms', operators/drift.ks_from_tdigest): no
-    [lo, hi) range must be declared up front and tail resolution
-    adapts to the data — the right spec when the value range is
-    unknown. Global like KSDriftCheck (partition='*'). NOT fused with
-    the stats pass: the digest is a mapInPandas pass, so this check
-    costs one extra scan of the expression per side (each reducing to
-    ≤ ~2δ centroid rows).
-
-    ``max_psi`` (optional) additionally emits a ``psi_digest`` verdict
-    over reference-equiprobable buckets, computed from the SAME two
-    digests — zero extra scans."""
-    name: str
-    expr: Callable[[], Column]
-    max_ks: float = 0.2
-    delta: float = 300.0
-    max_psi: float | None = None
-    n_psi_buckets: int = 20
-    reference: Callable[[SparkSession], DataFrame] | None = None
-
-
-@dataclass
-class ProfileCheck:
-    """Categorical column health gate from the SAME fused profile scan
-    the drift checks ride (operators/drift.drift_profile): the value
-    counts collapse to |categories| driver-side rows, from which up to
-    four verdicts are derived with zero extra table scans —
-
-      * ``profile_entropy``      Shannon entropy (bits) >= min_entropy
-                                 (a crawl collapsing to one language
-                                 drives lang entropy toward 0)
-      * ``profile_mode_share``   hottest value's share <= max_mode_share
-                                 (hot-value takeover / constant column)
-      * ``profile_min_distinct`` distinct non-null values >= min_distinct
-      * ``profile_max_distinct`` distinct non-null values <= max_distinct
-                                 (category-vocabulary explosion, e.g. a
-                                 lang column degrading to free text)
-
-    Metrics are over NON-NULL values (frequencies renormalized; the
-    profile scan keeps NULL as its own bucket, which the null-rate
-    gates in StatsCheck already cover). Entropy uses the algebraic
-    log2(N) − Σ n·log2 n / N over the exact value counts, rounded to
-    6 dp (operators/stats.categorical_profile's cross-engine
-    convention). A column with zero non-null values fails every
-    configured verdict closed (metric NULL). Global (partition='*'):
-    entropy is not partition-decomposable, and on resume the verdict
-    must not depend on crash state.
-
-    Scale: exact value counts shuffle one row per distinct value —
-    meant for categorical columns (lang, source, content_type), not
-    ~unique keys (there entropy ≈ log2 N and the right gate is the
-    HLL distinct count in StatsCheck)."""
-    column: str
-    min_entropy: float | None = None
-    max_mode_share: float | None = None
-    min_distinct: int | None = None
-    max_distinct: int | None = None
-
-    def __post_init__(self) -> None:
-        if (
-            self.min_entropy is None
-            and self.max_mode_share is None
-            and self.min_distinct is None
-            and self.max_distinct is None
-        ):
-            raise ValueError(
-                f"ProfileCheck({self.column!r}): configure at least one "
-                "of min_entropy / max_mode_share / min_distinct / "
-                "max_distinct"
-            )
-
-
-@dataclass
-class RepetitionCheck:
-    """Gopher-style within-document repetition gate
-    (functions/textstats.repetition_metrics): per-partition MEAN
-    duplicate-2-gram fraction and top-2-gram share must stay under
-    their thresholds. Partition-scoped (one verdict row per partition
-    per enabled threshold) so it resumes like stats/uniqueness.
-    Costs one scan of (partition, text) — per-row JVM HOF work, not
-    fused with the stats pass (the token array cannot ride the
-    fused agg's struct schema cheaply).
-
-    ``id_col`` enables a violations dump: documents whose
-    dup-2-gram fraction exceeds ``doc_dup_2gram_limit``, sorted
-    (partition, fraction desc, id) and capped at violation_limit.
-    (The dump re-derives the per-doc frame lazily — a second text scan
-    IF the violations are actually consumed.)
-
-    Determinism caveat vs the suite's bit-identical guarantee: the
-    per-doc fractions are exact, but their partition MEAN is a float
-    sum whose accumulation order follows task layout — round(…, 6)
-    masks the ulp-level difference except exactly at a rounding
-    boundary. KSDigestDriftCheck is likewise partitioning-dependent
-    within its rank-error bound (digests merge in partition order).
-    The reference-parity checks (stats/uniqueness/refint/compare) keep
-    the strict guarantee."""
-    text_col: str = "text"
-    max_mean_dup_2gram: float | None = 0.2
-    max_mean_top_2gram: float | None = None
-    id_col: str | None = None
-    doc_dup_2gram_limit: float | None = None
-    violation_limit: int = 500
-
-
-@dataclass
-class NearDupCheck:
-    """Corpus-level near-duplicate mass gate: MinHash-LSH candidate
-    pairs with exact-Jaccard verification (operators/dedup.
-    minhash_lsh_pairs) -> large-star/small-star duplicate clusters
-    (operators/components.duplicate_clusters). Verdict metric = the
-    fraction of documents a keep-one-exemplar retention pass would
-    DROP (non-exemplar cluster members / count(id_col)); passes while
-    metric <= max_neardup_frac.
-
-    GLOBAL (one verdict row, partition '*'): near-duplicate structure
-    crosses partition boundaries by nature, so ``run_resumable`` runs
-    it over the UNFILTERED table like the drift checks — a resumed
-    run reports the same verdict as an uninterrupted one.
-
-    Unlike the lazy checks, the cluster contraction loop materializes
-    eagerly at ``run()`` time (its convergence test is an action);
-    the converged star edges are localCheckpoint-ed, so the verdict
-    metric and the violations dump both reread tiny cluster frames,
-    never the corpus. ``dump_violations`` emits key
-    ``neardup:{text_col}``: the non-exemplar members
-    (id, component, cluster_size), sorted, capped at violation_limit.
-
-    Node ids (``id_col``) need only a total order — long doc ids and
-    string urls both work; the exemplar is the component's MINIMUM id
-    (ids assigned in crawl order ⇒ "keep the first-crawled copy").
-
-    ``pair_mode`` defaults to ``"chain"`` (see minhash_lsh_pairs): a
-    template-heavy web corpus puts m near-identical members in one
-    LSH bucket, and this check only needs their CONNECTIVITY — the
-    chain gives it in O(m) candidates where the all-pairs list is
-    O(m²) by definition. Set ``"all"`` to force the complete
-    pair-list semantics of the standalone dedup queries."""
-    text_col: str = "text"
-    id_col: str = "doc_id"
-    jaccard_threshold: float = 0.8
-    max_neardup_frac: float = 0.05
-    shingle_k: int = 3
-    num_hashes: int = 32
-    bands: int = 8
-    max_bucket: int = 10_000
-    dump_violations: bool = True
-    violation_limit: int = 500
-    pair_mode: str = "chain"
-
-
-@dataclass
-class LineDupCheck:
-    """Corpus-level boilerplate-mass gate (CCNet / RefinedWeb,
-    operators/linededup): verdict metric = the fraction of the
-    corpus's line/sentence segments whose NORMALIZED form recurs in
-    >= ``min_docs`` documents (sum of per-doc dup lines / sum of
-    lines); passes while metric <= max_dup_line_frac. The gate a
-    curation pipeline puts in front of strip_duplicate_lines: when it
-    fires, the table needs boilerplate stripping before training.
-
-    GLOBAL (one verdict row, partition '*'): line frequency crosses
-    partition boundaries by nature, so ``run_resumable`` runs it over
-    the UNFILTERED table like NearDupCheck/drift — a resumed run
-    reports the same verdict as an uninterrupted one.
-
-    Scale: rides line_duplicate_stats — one scan+split+explode pass
-    (AQE stage reuse), shuffle carries (id, 16 B line-hash) only,
-    never text. ``dump_violations`` emits key ``linedup:{text_col}``:
-    the worst per-doc offenders (id, n_lines, n_dup_lines,
-    dup_line_frac) ordered by dup share, capped at violation_limit.
-    """
-    text_col: str = "text"
-    id_col: str = "doc_id"
-    min_docs: int = 2
-    max_dup_line_frac: float = 0.3
-    sep_regex: str = r"\n"
-    dump_violations: bool = True
-    violation_limit: int = 500
-
-
-@dataclass
-class LMCheck:
-    """CCNet-style corpus fluency gate (operators/lm): self-trained
-    add-one bigram LM, each document scored by its mean smoothed
-    p(w2|w1) (``mean_p``, the exact-integer-quantized score). Verdict
-    metric = the fraction of scored documents whose mean_p falls
-    OUTSIDE [min_mean_p, max_mean_p] — below the band is the
-    surprising/garbled tail, above it the boilerplate head; passes
-    while metric <= max_outlier_frac.
-
-    GLOBAL (one verdict row, partition '*'): the LM is trained on the
-    whole corpus, so ``run_resumable`` runs it over the UNFILTERED
-    table like NearDupCheck/LineDupCheck — a resumed run reports the
-    same verdict as an uninterrupted one. Documents with < 2 tokens
-    are not scored (and not counted) — gate emptiness separately with
-    a StatsCheck/ExprCheck.
-
-    Deterministic: mean_p never touches libm (operators/lm module
-    doc), so the metric is bit-identical at any parallelism and the
-    verdict row is oracle-comparable (query ``suite_lm_verdicts``).
-
-    ``dump_violations`` emits key ``lm:{text_col}``: the out-of-band
-    documents (id, n_bigrams, n_unseen, n_rare, mean_p), most
-    anomalous first (distance from the band), capped at
-    violation_limit."""
-    text_col: str = "text"
-    id_col: str = "doc_id"
-    min_mean_p: float = 0.0
-    max_mean_p: float = 1.0
-    max_outlier_frac: float = 0.05
-    dump_violations: bool = True
-    violation_limit: int = 500
-
-
-@dataclass
-class ExprCheck:
-    """Deequ-style declarative row-predicate gate (VERDICT r4 #3):
-    assert an arbitrary boolean SQL expression holds for (almost)
-    every row of each partition — the escape hatch for constraints
-    the built-in check kinds don't model (``url LIKE 'http%'``,
-    ``length(text) <= 2*n_chars`` …).
-
-    Verdict metric = the partition's violation RATIO over its row
-    count; a row violates when the predicate is FALSE **or NULL**
-    (fail-closed — a predicate that cannot be evaluated on a row
-    counts against it). Passes while ratio ≤ max_violation_ratio.
-
-    Scale: costs ZERO extra scans when a StatsCheck is present — each
-    predicate is one more ``count_if`` riding the fused
-    groupBy(partition) stats pass (operators/stats.
-    partition_stats_pass ``expr_counts``); without a StatsCheck all
-    ExprChecks share ONE dedicated fused pass. ``id_col`` opts into a
-    violations dump (key ``expr:{name}``): offending rows'
-    (partition, id), sorted, capped at violation_limit — derived
-    lazily (a second scan only if the dump is consumed).
-    Partition-scoped, so it resumes like stats/uniqueness."""
-    name: str
-    predicate_sql: str
-    max_violation_ratio: float = 0.0
-    id_col: str | None = None
-    violation_limit: int = 500
-
-
-@dataclass
-class SchemaCheck:
-    """Declarative schema gate — the reference's check #1
-    (data_processor.py schema diff) as a suite kind, so a suite can
-    fail fast on a drifted table before paying for any scan.
-
-    ``expected`` maps column name → Spark simpleString type ("string",
-    "bigint", "timestamp", …). Verdict rows are global (partition
-    '*'), one per expected column plus one per UNEXPECTED column when
-    ``exact=True``: metric 1.0 = present with the right type. Purely
-    driver-side (df.schema — free, like the reference's dry-run
-    schema fetch, SURVEY §2 S6/O2); global, so run_resumable treats
-    it like drift checks (unfiltered table, same verdict whether or
-    not the run resumed)."""
-    expected: dict[str, str]
-    exact: bool = False  # True: extra columns also fail
-
-
-@dataclass
-class FingerprintCheck:
-    """Per-partition content LINEAGE, not a verdict: reduce every
-    partition to (n_rows, fp_lo, fp_hi) — the order-independent,
-    engine-portable content fingerprint of operators/fingerprint.py —
-    as part of the suite run.
-
-    Emits no verdict rows. The frame lands in
-    ``SuiteResult.fingerprints``; under ``run_resumable`` it is also
-    appended to ``{audit_path}/fingerprints`` and each partition's
-    manifest record carries its fingerprint, so the NEXT run can
-    answer "which partitions changed since the validated version?"
-    from the audit table alone (``changed_partitions_vs_audit``)
-    without ever rescanning this version.
-
-    Scale: with a StatsCheck present this costs ZERO extra scans —
-    one projected md5 plus three aggregates riding the fused
-    groupBy(partition) stats pass; standalone it is the one-scan
-    map-side-combined aggregation of ``partition_fingerprint``.
-    Honest cost note (scripts/ab_fingerprint.py, 20M pages): the md5
-    over the encoded row IS the cost — it dwarfs the saved second
-    scan on a page-cache-hot single box (fused vs two-pass measured
-    ~even: 41.4 vs 41.9 s at 8 cores, 13.6 vs 14.6 s at 32); the
-    fusion win is the avoided second READ, which matters exactly when
-    scans are IO-bound — the cold-100 TB regime this engine targets.
-    ``cols`` must be string-cast engine-portable (ints/strings/dates
-    — see the float caveat in operators/fingerprint.py)."""
-    cols: list[str]
-
-
-@dataclass
-class CompareCheck:
-    """Two-table diff family — the reference's flagship workflow
-    (``/root/reference/data_check/data_processor.py:211-285``, driven
-    as one Streamlit session in ``streamlit_app.py:189-351``) — as a
-    declarative suite check: PK census + per-column match ratios as
-    verdict rows, exclusive-PK dumps (and optionally the row-level
-    diff) as violation frames. Global like drift (partition='*'):
-    the comparison is a whole-table property.
-
-    Verdict rows emitted (uniform schema):
-
-    * ``('*', pk, 'pk_missing_ratio_1', m, max_missing_ratio, …)`` and
-      ``…_2`` — the census missing-key ratios per side;
-    * ``('*', col, 'ratio_equal', r, min_ratio_equal, …)`` per
-      compared column.
-
-    Fail-closed NULL semantics: a NULL metric (zero joined rows — the
-    reference's client-side "query returned no rows" error,
-    ``streamlit_app.py:252-255`` — or an empty census) fails the
-    verdict rather than raising, so one broken comparison cannot kill
-    a multi-check suite run; the standalone operator path
-    (``operators/rowdiff.collect_ratios_checked``) keeps the
-    reference's raising behavior.
-
-    ``reference``: loader for "table 2"; None uses the suite-level
-    ``reference_df`` (sharing it with drift checks compares the same
-    two table versions across check kinds).
-
-    Scale: census is the union+groupBy plan (one hash aggregation, no
-    sort — ``operators/rowdiff.pk_census``), ratios are ONE inner join
-    + ONE fused aggregation for all columns; both reduce to bounded
-    results (1 row / |columns| rows) collected concurrently with the
-    suite's other phase-1 materializations. Violation dumps stay lazy.
-    """
-    name: str
-    pk: str
-    reference: Callable[[SparkSession], DataFrame] | None = None
-    columns: list[str] | None = None
-    max_missing_ratio: float = 0.0
-    min_ratio_equal: float = 1.0
-    exclusive_limit: int = 500  # ref bigquery.py:105
-    row_diff: bool = False  # row-level diff dump is opt-in (unbounded)
-    reference_mode: bool = True  # sentinel semantics (SURVEY §2.10)
+def _spark_order(row: tuple) -> tuple:
+    """Sort key (partition, check, column), None first — the order of
+    Spark's ascending orderBy."""
+    return tuple((v is not None, v) for v in (row[0], row[2], row[1]))
 
 
 @dataclass
@@ -549,7 +100,8 @@ class SuiteResult:
     drift_digests: DataFrame | None = None
 
     def passed(self) -> bool:
-        return self.verdicts.filter(~F.col("passed")).isEmpty()
+        # fail-closed: a NULL passed flag counts as a failure
+        return self.verdicts.filter(~F.coalesce(F.col("passed"), F.lit(False))).isEmpty()
 
     def unpersist(self) -> None:
         """Release the small intermediate frames run() persisted (call
@@ -563,6 +115,37 @@ class SuiteResult:
 class CheckSuite:
     checks: list = field(default_factory=list)
 
+    def _plan(self, spark: SparkSession, df: DataFrame, part: Column | None, **refs) -> Run:
+        """Every check's share of the fused passes, checked for
+        clashes. Submits no Spark job."""
+        for chk in self.checks:
+            if not isinstance(chk, Check):
+                raise TypeError(f"unknown check type: {type(chk)}")
+        run = Run(spark, df, part, **refs)
+        for chk in self.checks:
+            chk.share(run)
+        # the fused drift profile keys categorical columns and numeric
+        # check names in one `kind` namespace — a collision would merge
+        # category values and histogram buckets into one table
+        cross = set(run.cats) & set(run.hists)
+        if cross:
+            raise ValueError(
+                f"drift checks share the profile namespace {sorted(cross)}: "
+                "a CategoricalDriftCheck/ProfileCheck column must not equal "
+                "a numeric drift check's name — rename the numeric check"
+            )
+        # verdicts, violation dumps and pass aggregates are keyed by
+        # these names: a duplicate would silently overwrite its twin
+        keys: dict[str, list] = {}
+        for chk in self.checks:
+            if chk.named_by() is not None:
+                keys.setdefault(chk.duplicates, []).append(chk.named_by())
+        for msg, named in keys.items():
+            dup = sorted({k for k in named if named.count(k) > 1})
+            if dup:
+                raise ValueError(msg.format(dup=dup))
+        return run
+
     def drift_profile_of(self, df: DataFrame) -> DataFrame:
         """(kind, key, freq) profile of ``df`` under this suite's
         fused drift checks — the bootstrap for profile-based drift:
@@ -572,20 +155,8 @@ class CheckSuite:
         ``run_resumable`` persist each version's own profile
         automatically. Bucket specs mirror run()'s fused assembly
         (kinds keyed by check name, zero buckets absent)."""
-        from data_check_spark.operators.drift import drift_profile
-
-        cats = {
-            c.column: F.col(c.column)
-            for c in self.checks
-            if isinstance(c, CategoricalDriftCheck) and c.reference is None
-        }
-        nums = {
-            c.name: (c.expr(), c.lo, c.hi, c.n_buckets)
-            for c in self.checks
-            if isinstance(c, (NumericDriftCheck, KSDriftCheck))
-            and c.reference is None
-        }
-        return drift_profile(df, cats, nums).select("kind", "key", "freq")
+        run = self._plan(df.sparkSession, df, None)
+        return drift_profile(df, run.ref_cats, run.hists).select("kind", "key", "freq")
 
     def drift_digest_of(self, df: DataFrame) -> DataFrame | None:
         """(kind, mean, weight, vmin, vmax, is_edge) t-digest rows of
@@ -593,23 +164,13 @@ class CheckSuite:
         — the bootstrap for digest-based drift (see
         ``drift_profile_of``). None when the suite has no such
         checks."""
-        from data_check_spark.operators.sketch import (
-            merge_tdigest,
-            partition_tdigest,
-        )
-
         frames = [
-            merge_tdigest(
-                partition_tdigest(df.select(c.expr().alias("_v")), "_v", c.delta),
-                c.delta,
-            ).select(
-                F.lit(c.name).alias("kind"),
-                "mean", "weight", "vmin", "vmax", "is_edge",
+            c.digest(df).select(
+                F.lit(c.name).alias("kind"), "mean", "weight", "vmin", "vmax", "is_edge"
             )
-            for c in self.checks
-            if isinstance(c, KSDigestDriftCheck) and c.reference is None
+            for c in self._plan(df.sparkSession, df, None).digest_checks
         ]
-        return _union_all(frames)
+        return reduce(DataFrame.unionByName, frames) if frames else None
 
     def run(
         self,
@@ -638,1170 +199,54 @@ class CheckSuite:
         that use the shared reference (per-check ``reference`` loaders
         still scan). A kind with no stored rows fails that verdict
         closed (empty-side NULL semantics)."""
-        run_id = run_id or uuid.uuid4().hex[:12]
-        import math
-        from concurrent.futures import ThreadPoolExecutor
+        return self._run(
+            spark, df, partition_col, reference_df, run_id, reference_profile, reference_digest
+        )[0]
 
-        from pyspark import StorageLevel
-
+    def _run(
+        self, spark, df, partition_col, reference_df, run_id, reference_profile, reference_digest
+    ) -> tuple[SuiteResult, list[tuple], Run]:
+        """run(), also returning the sorted verdict rows and the Run."""
         part = F.col(partition_col) if isinstance(partition_col, str) else partition_col
-        part_s = part.cast("string")
-        verdict_frames: list[DataFrame] = []
-        violations: dict[str, DataFrame] = {}
-        cached: list[DataFrame] = []
-        drift_profile_df: DataFrame | None = None
-        digest_frames: list[DataFrame] = []
-        # computed once, shared by uniqueness/refint verdict joins —
-        # otherwise each check re-scans the table for the partition list
-        all_parts: DataFrame | None = None
-
-        def get_all_parts() -> DataFrame:
-            nonlocal all_parts
-            if all_parts is None:
-                all_parts = (
-                    df.select(part_s.alias("partition"))
-                    .distinct()
-                    .persist(StorageLevel.MEMORY_AND_DISK)
-                )
-                cached.append(all_parts)
-            return all_parts
-
-        def join_all_parts(per_part: DataFrame) -> DataFrame:
-            # NULL-SAFE left join: a NULL partition's violation counts
-            # must land on its all_parts row — plain "partition"
-            # equality never matches NULL=NULL, so the coalesce below
-            # would turn real violations into metric 0.0 / passed=True
-            ap = get_all_parts()
-            return ap.join(
-                per_part,
-                ap["partition"].eqNullSafe(per_part["partition"]),
-                "left",
-            ).drop(per_part["partition"])
-
-        # drift checks against the shared reference_df are FUSED into
-        # one profile scan per table (drift.drift_profile) — a suite
-        # with lang-frequency and text-length drift costs 2 scans
-        # (df + ref), not 2 per check. Checks with their own
-        # `reference` loader run individually below.
-        fused_cat: list[CategoricalDriftCheck] = []
-        fused_num: list[NumericDriftCheck] = []
-        fused_ks: list[KSDriftCheck] = []
-        for chk in self.checks:
-            if isinstance(chk, CategoricalDriftCheck) and chk.reference is None:
-                fused_cat.append(chk)
-            elif isinstance(chk, NumericDriftCheck) and chk.reference is None:
-                fused_num.append(chk)
-            elif isinstance(chk, KSDriftCheck) and chk.reference is None:
-                fused_ks.append(chk)
-        if (
-            (fused_cat or fused_num or fused_ks)
-            and reference_df is None
-            and reference_profile is None
-        ):
-            names = (
-                [c.column for c in fused_cat]
-                + [c.name for c in fused_num]
-                + [c.name for c in fused_ks]
-            )
-            raise ValueError(
-                f"drift checks {names}: no reference table or profile"
-            )
-
-        stats_checks = [c for c in self.checks if isinstance(c, StatsCheck)]
-        fused_stats: StatsCheck | None = stats_checks[0] if stats_checks else None
-        stats_verdicts_df: DataFrame | None = None
-        pass_df = None
-        pass_src = None
-        # histogram specs are keyed by check name across BOTH drift
-        # kinds — a PSI and a KS check sharing a name with different
-        # lo/hi/n_buckets would silently use one spec for both
-        all_names = [c.name for c in fused_num] + [c.name for c in fused_ks]
-        dup_names = {n for n in all_names if all_names.count(n) > 1}
-        if dup_names:
-            raise ValueError(
-                f"drift checks share histogram names {sorted(dup_names)}: "
-                "numeric drift checks (PSI or KS) must have unique names — "
-                "the histogram spec (lo, hi, n_buckets) is keyed by name"
-            )
-        nums = {c.name: (c.expr(), c.lo, c.hi, c.n_buckets) for c in fused_num}
-        nums.update({c.name: (c.expr(), c.lo, c.hi, c.n_buckets) for c in fused_ks})
-        cats = {c.column: F.col(c.column) for c in fused_cat}
-        # the fused drift profile keys BOTH kinds in one `kind`
-        # namespace (drift.drift_profile) — a categorical column and a
-        # numeric check name colliding would merge category values and
-        # histogram buckets into one frequency table, corrupting both
-        profile_cols_early = [
-            c.column for c in self.checks if isinstance(c, ProfileCheck)
-        ]
-        cross = (set(cats) | set(profile_cols_early)) & set(nums)
-        if cross:
-            raise ValueError(
-                f"drift checks share the profile namespace {sorted(cross)}: "
-                "a CategoricalDriftCheck/ProfileCheck column must not equal "
-                "a numeric drift check's name — rename the numeric check"
-            )
-        profile_checks = [c for c in self.checks if isinstance(c, ProfileCheck)]
-        prof_cols = [c.column for c in profile_checks]
-        if len(set(prof_cols)) != len(prof_cols):
-            dup = sorted({c for c in prof_cols if prof_cols.count(c) > 1})
-            raise ValueError(
-                f"profile checks must have distinct columns (verdicts are "
-                f"keyed by column): duplicates {dup}"
-            )
-        # a ProfileCheck's value counts share the drift profile's kind
-        # key (the column name) — a CategoricalDriftCheck on the same
-        # column contributes the SAME rows, counted once
-        cats.update({c.column: F.col(c.column) for c in profile_checks})
-
-        cmp_names = [c.name for c in self.checks if isinstance(c, CompareCheck)]
-        if len(set(cmp_names)) != len(cmp_names):
-            dup = sorted({n for n in cmp_names if cmp_names.count(n) > 1})
-            raise ValueError(
-                f"compare checks must have unique names (violations are "
-                f"keyed by name): duplicates {dup}"
-            )
-        fd_dets = [
-            c.determinant
-            for c in self.checks
-            if isinstance(c, FunctionalDependencyCheck)
-        ]
-        if len(set(fd_dets)) != len(fd_dets):
-            dup = sorted({d for d in fd_dets if fd_dets.count(d) > 1})
-            raise ValueError(
-                f"functional-dependency checks must have distinct "
-                f"determinants (violations are keyed by determinant): "
-                f"duplicates {dup} — merge the dependent lists into one check"
-            )
-        rep_cols = [c.text_col for c in self.checks if isinstance(c, RepetitionCheck)]
-        if len(set(rep_cols)) != len(rep_cols):
-            dup = sorted({c for c in rep_cols if rep_cols.count(c) > 1})
-            raise ValueError(
-                f"repetition checks must target distinct columns (verdicts "
-                f"and violations are keyed by text_col): duplicates {dup} — "
-                "combine the thresholds into one RepetitionCheck"
-            )
-
-        nd_cols = [c.text_col for c in self.checks if isinstance(c, NearDupCheck)]
-        if len(set(nd_cols)) != len(nd_cols):
-            dup = sorted({c for c in nd_cols if nd_cols.count(c) > 1})
-            raise ValueError(
-                f"neardup checks must target distinct columns (verdicts and "
-                f"violations are keyed by text_col): duplicates {dup}"
-            )
-
-        ld_cols = [c.text_col for c in self.checks if isinstance(c, LineDupCheck)]
-        if len(set(ld_cols)) != len(ld_cols):
-            dup = sorted({c for c in ld_cols if ld_cols.count(c) > 1})
-            raise ValueError(
-                f"linedup checks must target distinct columns (verdicts and "
-                f"violations are keyed by text_col): duplicates {dup}"
-            )
-
-        lm_cols = [c.text_col for c in self.checks if isinstance(c, LMCheck)]
-        if len(set(lm_cols)) != len(lm_cols):
-            dup = sorted({c for c in lm_cols if lm_cols.count(c) > 1})
-            raise ValueError(
-                f"lm checks must target distinct columns (verdicts and "
-                f"violations are keyed by text_col): duplicates {dup}"
-            )
-
-        fp_checks = [c for c in self.checks if isinstance(c, FingerprintCheck)]
-        if len(fp_checks) > 1:
-            raise ValueError(
-                "at most one FingerprintCheck per suite (its output is the "
-                "run's single lineage frame) — put every column in one check"
-            )
-        fp_check = fp_checks[0] if fp_checks else None
-        fingerprints: DataFrame | None = None
-
-        # same silent-overwrite hazard the expr/compare/profile guards
-        # close: these kinds key their violation dumps (and, for the
-        # digest check, the persisted digest rows) by key/name
-        for kind, keys in (
-            ("uniqueness", [c.key for c in self.checks
-                            if isinstance(c, UniquenessCheck)]),
-            ("referential", [c.name for c in self.checks
-                             if isinstance(c, ReferentialCheck)]),
-            ("ks-digest drift", [c.name for c in self.checks
-                                 if isinstance(c, KSDigestDriftCheck)]),
-        ):
-            if len(set(keys)) != len(keys):
-                dup = sorted({k for k in keys if keys.count(k) > 1})
-                raise ValueError(
-                    f"{kind} checks must have unique keys/names (violation "
-                    f"dumps are keyed by them): duplicates {dup}"
-                )
-
-        expr_checks = [c for c in self.checks if isinstance(c, ExprCheck)]
-        expr_names = [c.name for c in expr_checks]
-        if len(set(expr_names)) != len(expr_names):
-            dup = sorted({n for n in expr_names if expr_names.count(n) > 1})
-            raise ValueError(
-                f"expr checks must have unique names (pass aggregates and "
-                f"violations are keyed by name): duplicates {dup}"
-            )
-        # violation predicate per check: FALSE-or-NULL rows count
-        # (fail-closed) — shared by the fused count_if and the dump
-        expr_viol = {
-            c.name: ~F.coalesce(F.expr(c.predicate_sql), F.lit(False))
-            for c in expr_checks
-        }
-
-        # ---- Phase 1: submit every heavy materialization as a
-        # CONCURRENT Spark action. The suite's expensive inputs are
-        # mutually independent — the fused stats pass, the two drift
-        # profile scans, the uniqueness duplicate census and each
-        # referential per-key aggregate — and every one reduces to a
-        # SMALL result (bounded by partitions/buckets/violations, not
-        # data size). Running them from a thread pool overlaps their
-        # job latencies on the shared executor pool: the latency-bound
-        # phases (shuffle stage barriers, AQE re-plans, broadcast
-        # builds) hide behind the compute-bound stats scan instead of
-        # adding to it serially.
-        pool = ThreadPoolExecutor(max_workers=6)
-        futs: dict = {}
-        uniq_dups: dict[int, DataFrame] = {}
-        fd_viols: dict[int, DataFrame] = {}
-        ref_perkey: dict[int, DataFrame] = {}
-        cmp_refs: dict[int, DataFrame] = {}
-        try:
-            if fused_stats is not None:
-                from data_check_spark.operators.stats import (
-                    exact_distinct_counts,
-                    partition_stats_pass,
-                )
-
-                # the suite's ONE expensive scan: the groupBy(partition)
-                # pass also computes the numeric-drift histograms, so
-                # the wide text column is decoded exactly once for
-                # stats + drift combined. The per-partition result is
-                # collected driver-side (bounded by the partition
-                # count, same class of bounded collect as the sketch
-                # readout): persist() here was measured strictly worse
-                # — 44s cache build vs 31s collect for the same
-                # aggregation at local[32]/20M pages, and composed
-                # verdict plans were observed re-running the scan on
-                # cache misses anyway. A local relation is computed
-                # exactly once and is free to read in all consumer
-                # branches (stats verdicts, numeric drift profile,
-                # partition list, verdict joins).
-                pass_src = partition_stats_pass(
-                    df, part_s, fused_stats.thresholds, fused_stats.approx, nums,
-                    exact_distinct=fused_stats.exact_distinct,
-                    expr_counts=expr_viol,
-                    fingerprint_cols=fp_check.cols if fp_check else None,
-                )
-                futs["pass"] = pool.submit(
-                    lambda: [r.asDict(recursive=True) for r in pass_src.collect()]
-                )
-                if fused_stats.exact_distinct:
-                    futs["exact"] = pool.submit(
-                        exact_distinct_counts, df, part_s, fused_stats.exact_distinct
-                    )
-
-            if fp_check is not None and fused_stats is None:
-                # no stats pass to ride — the standalone one-scan agg
-                # (lazy; materialized by whoever consumes the lineage)
-                from data_check_spark.operators.fingerprint import (
-                    partition_fingerprint,
-                )
-
-                fingerprints = partition_fingerprint(df, part_s, fp_check.cols)
-
-            if expr_checks and fused_stats is None:
-                # no stats pass to ride — all ExprChecks share ONE
-                # dedicated fused pass (same shape: groupBy(partition),
-                # one count_if per predicate, bounded output)
-                xaggs = [F.count(F.lit(1)).alias("_xn")] + [
-                    F.count_if(expr_viol[n]).alias(f"_x_{n}") for n in expr_names
-                ]
-                futs["expr"] = pool.submit(
-                    df.groupBy(part_s.alias("partition")).agg(*xaggs).collect
-                )
-
-            if fused_cat or fused_num or fused_ks or profile_checks:
-                from data_check_spark.operators.drift import drift_profile
-
-                # profiles collapse to (kind, key, n, freq) rows
-                # bounded by |categories| + |buckets| — collected and
-                # reduced to PSI verdicts driver-side, which removes
-                # the profile join / psi aggregation / threshold
-                # broadcast stages from the critical path entirely
-                if fused_stats is not None and (fused_num or fused_ks):
-                    # numeric df-side profile falls out of the stats
-                    # pass; scan only the cheap categorical columns
-                    if cats:
-                        futs["prof_df"] = pool.submit(
-                            lambda: drift_profile(df, cats, {}).collect()
-                        )
-                else:
-                    futs["prof_df"] = pool.submit(
-                        lambda: drift_profile(df, cats, nums).collect()
-                    )
-                # ProfileChecks need only this table's own counts — a
-                # profile-only suite never touches (or requires) a
-                # reference side
-                if fused_cat or fused_num or fused_ks:
-                    if reference_profile is not None:
-                        # stored profile stands in for the reference
-                        # scan: reading |categories|+|buckets| audit
-                        # rows, not the reference version's 100 TB
-                        futs["prof_ref"] = pool.submit(
-                            lambda: reference_profile.select(
-                                "kind", "key", "freq"
-                            ).collect()
-                        )
-                    else:
-                        # reference side scans only the DRIFT columns:
-                        # profile-only kinds have no reference use
-                        ref_cats = {c.column: F.col(c.column) for c in fused_cat}
-                        futs["prof_ref"] = pool.submit(
-                            lambda: drift_profile(
-                                reference_df, ref_cats, nums
-                            ).collect()
-                        )
-
-            for chk in self.checks:
-                if isinstance(chk, UniquenessCheck):
-                    # Hash-candidate two-phase duplicate census. Phase
-                    # 1 shuffles (partition, xxhash64(key)) — 8-byte
-                    # hashes, not full key strings: measured 2.3x
-                    # faster than the string-keyed groupBy at
-                    # local[32] on 20M urls (primitive-key
-                    # HashAggregate + ~4x fewer shuffle bytes). No
-                    # distinct() on the candidates: a left-semi probe
-                    # is indifferent to duplicate build keys and the
-                    # dedup added an exchange+stage. Phase 2 re-scans
-                    # only the key column, keeps rows whose hash is a
-                    # duplicate candidate, and recounts BY THE ACTUAL
-                    # KEY — hash collisions can never fabricate a
-                    # duplicate; phase 1 only prunes. The explicit
-                    # broadcast matters: AQE kept a SortMergeJoin
-                    # (sorting all fact rows) even with a ~3MB build
-                    # side; the candidate set is bounded by the
-                    # duplicate rate — for tables where duplicates are
-                    # a large fraction of rows, set
-                    # broadcast_candidates=False on the check.
-                    k = F.col(chk.key)
-                    h = F.xxhash64(k)
-                    cand_h = (
-                        df.groupBy(part_s.alias("partition"), h.alias("_h"))
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .filter(F.col("n") > 1)
-                        .select("_h")
-                    )
-                    build = F.broadcast(cand_h) if chk.broadcast_candidates else cand_h
-                    dup_rows = df.select(
-                        part_s.alias("partition"), k.alias("key_value"), h.alias("_h")
-                    ).join(build, "_h", "left_semi")
-                    dups = (
-                        dup_rows.groupBy("partition", "key_value")
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .filter(F.col("n") > 1)
-                        .persist(StorageLevel.MEMORY_AND_DISK)
-                    )
-                    cached.append(dups)
-                    uniq_dups[id(chk)] = dups
-                    futs[f"uniq_{id(chk)}"] = pool.submit(dups.count)
-                elif isinstance(chk, FunctionalDependencyCheck):
-                    # same two-phase hash-candidate shape as
-                    # UniquenessCheck (see the dataclass docstring).
-                    # The probe joins on the determinant hash alone —
-                    # broadcasting (hash) instead of (partition, hash)
-                    # keeps the build side minimal; a hash that
-                    # violates only in partition A semi-keeps its
-                    # partition-B rows too, and the by-value recount's
-                    # n_variants>1 filter discards them.
-                    det = F.col(chk.determinant)
-                    deps = [F.col(c) for c in chk.dependents]
-                    h_det, h_dep = F.xxhash64(det), F.xxhash64(*deps)
-                    cand = (
-                        df.groupBy(part_s.alias("partition"), h_det.alias("_hd"))
-                        .agg(F.count_distinct(h_dep).alias("_v"))
-                        .filter(F.col("_v") > 1)
-                        .select("_hd")
-                    )
-                    build = F.broadcast(cand) if chk.broadcast_candidates else cand
-                    viol = (
-                        df.select(
-                            part_s.alias("partition"),
-                            det.alias("key_value"),
-                            F.struct(*deps).alias("_dep"),
-                            h_det.alias("_hd"),
-                        )
-                        .join(build, "_hd", "left_semi")
-                        .groupBy("partition", "key_value")
-                        .agg(
-                            F.count_distinct("_dep").alias("n_variants"),
-                            F.count(F.lit(1)).alias("n_rows"),
-                        )
-                        .filter(F.col("n_variants") > 1)
-                        .persist(StorageLevel.MEMORY_AND_DISK)
-                    )
-                    cached.append(viol)
-                    fd_viols[id(chk)] = viol
-                    futs[f"fd_{id(chk)}"] = pool.submit(viol.count)
-                elif isinstance(chk, ReferentialCheck):
-                    from data_check_spark.operators.refint import (
-                        hashed_key,
-                        maybe_broadcast,
-                    )
-
-                    fk = F.expr(chk.fact_key) if isinstance(chk.fact_key, str) else chk.fact_key()
-                    dim = chk.dim(spark)
-                    if chk.mode not in ("join", "bloom"):
-                        raise ValueError(
-                            f"referential check {chk.name}: mode must be "
-                            f"'join' or 'bloom', got {chk.mode!r}"
-                        )
-                    if chk.mode == "bloom":
-                        from data_check_spark.operators.bloom import (
-                            KeyBloom,
-                            bloom_member_probe,
-                            build_key_bloom,
-                        )
-
-                        if chk.bloom is not None:
-                            bloom = chk.bloom
-                        elif chk.bloom_path is not None:
-                            bloom = KeyBloom.load(chk.bloom_path)
-                        else:
-                            bloom = build_key_bloom(dim, chk.dim_key, chk.fpp)
-                        member = bloom_member_probe(spark, bloom)
-                        # map-only classification; only certified
-                        # violations reach the census shuffle
-                        per_key = (
-                            df.filter(~member(fk))
-                            .groupBy(part_s.alias("partition"), fk.alias("ref_key"))
-                            .agg(F.count(F.lit(1)).alias("n"))
-                            .persist(StorageLevel.MEMORY_AND_DISK)
-                        )
-                        cached.append(per_key)
-                        ref_perkey[id(chk)] = per_key
-                        futs[f"ref_{id(chk)}"] = pool.submit(per_key.count)
-                        continue
-                    if chk.hash_keys:
-                        dim_side = dim.filter(
-                            F.col(chk.dim_key).isNotNull()
-                        ).select(F.xxhash64(chk.dim_key).alias("_dk"))
-                    else:
-                        dim_side = dim.select(F.col(chk.dim_key).alias("_dk"))
-                    dim_keys = maybe_broadcast(
-                        dim_side.dropDuplicates(), chk.broadcast
-                    )
-                    # aggregate BEFORE the anti-join: the (partition,
-                    # ref_key) groupBy collapses via map-side combine
-                    # to at most |dims| x |partitions| rows, so the
-                    # anti-join probes a tiny aggregate instead of
-                    # every fact row; the violation dump and the
-                    # per-partition verdict both reuse the persisted
-                    # result — the fact table is scanned exactly once
-                    # per referential check
-                    probe = (
-                        hashed_key(F.col("ref_key"))
-                        if chk.hash_keys
-                        else F.col("ref_key")
-                    )
-                    per_key = (
-                        df.groupBy(part_s.alias("partition"), fk.alias("ref_key"))
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .join(dim_keys, probe == F.col("_dk"), "left_anti")
-                        .persist(StorageLevel.MEMORY_AND_DISK)
-                    )
-                    cached.append(per_key)
-                    ref_perkey[id(chk)] = per_key
-                    futs[f"ref_{id(chk)}"] = pool.submit(per_key.count)
-                elif isinstance(chk, CompareCheck):
-                    from data_check_spark.operators.rowdiff import (
-                        column_match_ratios,
-                        pk_census,
-                    )
-
-                    cref = chk.reference(spark) if chk.reference else reference_df
-                    if cref is None:
-                        raise ValueError(
-                            f"compare check {chk.name}: no reference table"
-                        )
-                    cmp_refs[id(chk)] = cref
-                    # both reduce to bounded results (1 row / one row
-                    # per compared column) — collected concurrently
-                    # with the stats/drift/uniqueness jobs
-                    futs[f"cmp_cen_{id(chk)}"] = pool.submit(
-                        pk_census(df, cref, chk.pk).collect
-                    )
-                    futs[f"cmp_rat_{id(chk)}"] = pool.submit(
-                        column_match_ratios(
-                            df, cref, chk.pk,
-                            columns=chk.columns,
-                            reference_mode=chk.reference_mode,
-                        ).collect
-                    )
-
-            # ---- Phase 2: gather the bounded results and assemble
-            # verdicts — driver-side math on collected profiles,
-            # distributed joins only against already-persisted small
-            # frames.
-            if fused_stats is not None:
-                from data_check_spark.operators.stats import verdicts_from_pass
-
-                pass_rows = futs["pass"].result()
-                if "exact" in futs:
-                    exact = futs["exact"].result()
-                    # patch UNCONDITIONALLY (default 0) for every
-                    # exact_distinct column: exact_distinct_counts
-                    # reports 0 for all-NULL partitions, and a missing
-                    # entry must not leave n_distinct NULL — a NULL
-                    # metric makes passed NULL, which count_if(~passed)
-                    # silently reads as passing
-                    for row in pass_rows:
-                        for m in row["_m"]:
-                            if m["column"] in fused_stats.exact_distinct:
-                                m["n_distinct"] = exact.get(
-                                    (row["partition"], m["column"]), 0
-                                )
-                pass_df = spark.createDataFrame(pass_rows, pass_src.schema)
-                all_parts = pass_df.select("partition")
-                stats_verdicts_df = verdicts_from_pass(pass_df, fused_stats.thresholds)
-                if fp_check is not None:
-                    # lineage fell out of the same collected pass —
-                    # a |partitions|-row local relation, no extra scan
-                    fingerprints = pass_df.select(
-                        "partition",
-                        F.col("_fpn").alias("n_rows"),
-                        F.col("_fp_lo").alias("fp_lo"),
-                        F.col("_fp_hi").alias("fp_hi"),
-                    )
-
-            if fused_cat or fused_num or fused_ks or profile_checks:
-                from data_check_spark.operators.drift import EPS
-
-                # prof1 = df-side profile: numeric part summed from
-                # the stats-pass histograms driver-side (replicating
-                # numeric_profiles_from_pass: zero buckets absent so
-                # the EPS floor applies identically), categorical part
-                # from the collected scan
-                prof1: dict[tuple, float] = {}
-                prof_n: dict[tuple, int] = {}  # exact counts (ProfileCheck)
-                if fused_stats is not None and (fused_num or fused_ks):
-                    for name in nums:
-                        buckets: dict[int, int] = {}
-                        for row in pass_rows:
-                            for pos, cnt in enumerate(row[f"_h_{name}"]):
-                                if cnt:
-                                    buckets[pos] = buckets.get(pos, 0) + cnt
-                        total = sum(buckets.values())
-                        for pos, cnt in buckets.items():
-                            prof1[(name, str(pos))] = cnt / total
-                for r in (futs["prof_df"].result() if "prof_df" in futs else []):
-                    prof1[(r["kind"], r["key"])] = r["freq"]
-                    prof_n[(r["kind"], r["key"])] = r["n"]
-                # THIS table's profile, exposed for persistence: the
-                # next version drifts against these rows instead of
-                # rescanning this table (run(reference_profile=...))
-                drift_profile_df = spark.createDataFrame(
-                    [(kd, ky, float(fq)) for (kd, ky), fq in sorted(
-                        prof1.items(), key=lambda t: (t[0][0], t[0][1] or "")
-                    )],
-                    "kind string, key string, freq double",
-                )
-                drift_rows = []
-                for chk in profile_checks:
-                    # exact non-null value counts for this column —
-                    # zero extra scans, pure driver math over
-                    # |categories| collected rows
-                    kv = {
-                        ky: n
-                        for (kd, ky), n in prof_n.items()
-                        if kd == chk.column and ky is not None
-                    }
-                    n_total = sum(kv.values())
-                    nd = len(kv)
-                    if n_total > 0:
-                        # same algebraic form + 6dp rounding as
-                        # operators/stats.categorical_profile (keys
-                        # iterated sorted so the float sum is
-                        # run-order deterministic)
-                        entropy = round(
-                            math.log2(n_total)
-                            - sum(n * math.log2(n) for ky, n in sorted(kv.items()))
-                            / n_total,
-                            6,
-                        )
-                        mode_share = max(kv.values()) / n_total
-                    else:
-                        entropy = mode_share = None  # fail closed
-                    if chk.min_entropy is not None:
-                        drift_rows.append((
-                            "*", chk.column, "profile_entropy", entropy,
-                            float(chk.min_entropy),
-                            entropy is not None and entropy >= chk.min_entropy,
-                        ))
-                    if chk.max_mode_share is not None:
-                        drift_rows.append((
-                            "*", chk.column, "profile_mode_share", mode_share,
-                            float(chk.max_mode_share),
-                            mode_share is not None
-                            and mode_share <= chk.max_mode_share,
-                        ))
-                    if chk.min_distinct is not None:
-                        drift_rows.append((
-                            "*", chk.column, "profile_min_distinct", float(nd),
-                            float(chk.min_distinct),
-                            n_total > 0 and nd >= chk.min_distinct,
-                        ))
-                    if chk.max_distinct is not None:
-                        drift_rows.append((
-                            "*", chk.column, "profile_max_distinct", float(nd),
-                            float(chk.max_distinct),
-                            n_total > 0 and nd <= chk.max_distinct,
-                        ))
-                prof2 = (
-                    {
-                        (r["kind"], r["key"]): r["freq"]
-                        for r in futs["prof_ref"].result()
-                    }
-                    if "prof_ref" in futs
-                    else {}
-                )
-                th = {c.column: (c.max_psi, "psi_categorical") for c in fused_cat}
-                th.update({c.name: (c.max_psi, "psi_numeric") for c in fused_num})
-                for kind, (max_psi, check_name) in th.items():
-                    keys = {ky for kd, ky in prof1 if kd == kind} | {
-                        ky for kd, ky in prof2 if kd == kind
-                    }
-                    psi = round(
-                        sum(
-                            (prof1.get((kind, ky), EPS) - prof2.get((kind, ky), EPS))
-                            * math.log(
-                                prof1.get((kind, ky), EPS)
-                                / prof2.get((kind, ky), EPS)
-                            )
-                            for ky in keys
-                        ),
-                        6,
-                    )
-                    drift_rows.append(
-                        ("*", kind, check_name, float(psi), float(max_psi), psi <= max_psi)
-                    )
-                for c in fused_ks:
-                    # KS = max |CDF1 - CDF2| over the bucket edges,
-                    # absent buckets = 0 frequency (matching
-                    # drift.ks_statistic's coalesce-to-0 semantics)
-                    cdf1 = cdf2 = 0.0
-                    ks = 0.0
-                    for pos in range(c.n_buckets):
-                        cdf1 += prof1.get((c.name, str(pos)), 0.0)
-                        cdf2 += prof2.get((c.name, str(pos)), 0.0)
-                        ks = max(ks, abs(cdf1 - cdf2))
-                    ks = round(ks, 6)
-                    drift_rows.append(
-                        ("*", c.name, "ks_numeric", float(ks), float(c.max_ks), ks <= c.max_ks)
-                    )
-                verdict_frames.append(
-                    spark.createDataFrame(
-                        drift_rows,
-                        "partition string, column string, check string, "
-                        "metric double, threshold double, passed boolean",
-                    )
-                )
-
-            if expr_checks:
-                # verdict rows from the collected fused pass — bounded
-                # by |partitions| x |expr checks|, pure driver math
-                xrows = (
-                    pass_rows
-                    if fused_stats is not None
-                    else [r.asDict() for r in futs["expr"].result()]
-                )
-                erows = []
-                for row in xrows:
-                    n = row["_xn"]
-                    for chk in expr_checks:
-                        ratio = row[f"_x_{chk.name}"] / n if n else None
-                        erows.append((
-                            row["partition"], chk.name, "expr",
-                            ratio, float(chk.max_violation_ratio),
-                            # n=0 cannot happen (groupBy only emits
-                            # non-empty partitions) but fail closed
-                            ratio is not None and ratio <= chk.max_violation_ratio,
-                        ))
-                verdict_frames.append(
-                    spark.createDataFrame(
-                        erows,
-                        "partition string, column string, check string, "
-                        "metric double, threshold double, passed boolean",
-                    )
-                )
-
-            # drain the uniqueness/refint/compare materializations so
-            # any executor-side failure surfaces here, inside the pool
-            # scope (compare results are re-read below — .result() on a
-            # done future is free)
-            for fkey, fut in futs.items():
-                if fkey.startswith(("uniq_", "ref_", "cmp_")):
-                    fut.result()
-        finally:
-            pool.shutdown(wait=True)
-
-        for chk in self.checks:
-            if (
-                isinstance(chk, (CategoricalDriftCheck, NumericDriftCheck, KSDriftCheck))
-                and chk.reference is None
-            ):
-                continue  # handled by the fused profiles above
-            if isinstance(chk, StatsCheck):
-                if chk is fused_stats:
-                    v = stats_verdicts_df  # from the collected fused pass
-                else:
-                    v = partition_stats_verdicts(df, part_s, chk.thresholds, chk.approx)
-                verdict_frames.append(v.select(*VERDICT_COLS))
-
-            elif isinstance(chk, UniquenessCheck):
-                # built, persisted and materialized in Phase 1
-                dups = uniq_dups[id(chk)]
-                violations[f"unique:{chk.key}"] = dups.orderBy(
-                    "partition", "key_value"
-                ).limit(chk.violation_limit)
-                per_part = dups.groupBy("partition").agg(
-                    F.count(F.lit(1)).cast("double").alias("metric")
-                )
-                v = (
-                    join_all_parts(per_part)
-                    .select(
-                        "partition",
-                        F.lit(chk.key).alias("column"),
-                        F.lit("unique").alias("check"),
-                        F.coalesce("metric", F.lit(0.0)).alias("metric"),
-                        F.lit(float(chk.max_duplicate_keys)).alias("threshold"),
-                        (F.coalesce("metric", F.lit(0.0)) <= chk.max_duplicate_keys).alias("passed"),
-                    )
-                )
-                verdict_frames.append(v)
-
-            elif isinstance(chk, FunctionalDependencyCheck):
-                # built, persisted and materialized in Phase 1
-                viol = fd_viols[id(chk)]
-                violations[f"fd:{chk.determinant}"] = viol.orderBy(
-                    "partition", "key_value"
-                ).limit(chk.violation_limit)
-                per_part = viol.groupBy("partition").agg(
-                    F.count(F.lit(1)).cast("double").alias("metric")
-                )
-                v = (
-                    join_all_parts(per_part)
-                    .select(
-                        "partition",
-                        F.lit(chk.determinant).alias("column"),
-                        F.lit("fd").alias("check"),
-                        F.coalesce("metric", F.lit(0.0)).alias("metric"),
-                        F.lit(float(chk.max_violating_keys)).alias("threshold"),
-                        (
-                            F.coalesce("metric", F.lit(0.0))
-                            <= chk.max_violating_keys
-                        ).alias("passed"),
-                    )
-                )
-                verdict_frames.append(v)
-
-            elif isinstance(chk, ReferentialCheck):
-                # built, persisted and materialized in Phase 1
-                per_key = ref_perkey[id(chk)]
-                violations[f"refint:{chk.name}"] = per_key.orderBy("partition", "ref_key")
-                per_part = per_key.groupBy("partition").agg(
-                    F.sum("n").cast("double").alias("metric")
-                )
-                v = join_all_parts(per_part).select(
-                    "partition",
-                    F.lit(chk.name).alias("column"),
-                    F.lit("refint").alias("check"),
-                    F.coalesce("metric", F.lit(0.0)).alias("metric"),
-                    F.lit(float(chk.max_violation_rows)).alias("threshold"),
-                    (F.coalesce("metric", F.lit(0.0)) <= chk.max_violation_rows).alias("passed"),
-                )
-                verdict_frames.append(v)
-
-            elif isinstance(chk, CompareCheck):
-                from data_check_spark.operators.rowdiff import exclusive_rows, row_diff
-
-                cen = futs[f"cmp_cen_{id(chk)}"].result()
-                rat = futs[f"cmp_rat_{id(chk)}"].result()
-                c0 = cen[0] if cen else None
-                rows = []
-                for side in (1, 2):
-                    m = c0[f"missing_primary_keys_table{side}_ratio"] if c0 else None
-                    rows.append((
-                        "*", chk.pk, f"pk_missing_ratio_{side}",
-                        float(m) if m is not None else None,
-                        float(chk.max_missing_ratio),
-                        # fail-closed: NULL ratio = empty comparison
-                        m is not None and m <= chk.max_missing_ratio,
-                    ))
-                for r in rat:
-                    re_ = r["ratio_equal"]
-                    rows.append((
-                        "*", r["column"], "ratio_equal",
-                        float(re_) if re_ is not None else None,
-                        float(chk.min_ratio_equal),
-                        re_ is not None and re_ >= chk.min_ratio_equal,
-                    ))
-                verdict_frames.append(
-                    spark.createDataFrame(
-                        rows,
-                        "partition string, column string, check string, "
-                        "metric double, threshold double, passed boolean",
-                    )
-                )
-                cref = cmp_refs[id(chk)]
-                violations[f"compare:{chk.name}:exclusive_1"] = exclusive_rows(
-                    df, cref, chk.pk, side=1, limit=chk.exclusive_limit
-                )
-                violations[f"compare:{chk.name}:exclusive_2"] = exclusive_rows(
-                    df, cref, chk.pk, side=2, limit=chk.exclusive_limit
-                )
-                if chk.row_diff:
-                    violations[f"compare:{chk.name}:row_diff"] = row_diff(
-                        df, cref, chk.pk,
-                        columns=chk.columns, reference_mode=chk.reference_mode,
-                    )
-
-            elif isinstance(chk, ExprCheck):
-                # verdicts were assembled from the fused pass above;
-                # only the (lazy, opt-in) violations dump remains
-                if chk.id_col:
-                    violations[f"expr:{chk.name}"] = (
-                        df.filter(expr_viol[chk.name])
-                        .select(part_s.alias("partition"), F.col(chk.id_col))
-                        .orderBy("partition", chk.id_col)
-                        .limit(chk.violation_limit)
-                    )
-
-            elif isinstance(chk, CategoricalDriftCheck):
-                ref = chk.reference(spark) if chk.reference else reference_df
-                if ref is None:
-                    raise ValueError(f"drift check {chk.column}: no reference table")
-                psi = psi_categorical(df, ref, chk.column)
-                v = psi.select(
-                    F.lit("*").alias("partition"),
-                    F.lit(chk.column).alias("column"),
-                    F.lit("psi_categorical").alias("check"),
-                    F.col("psi").alias("metric"),
-                    F.lit(float(chk.max_psi)).alias("threshold"),
-                    (F.col("psi") <= chk.max_psi).alias("passed"),
-                )
-                verdict_frames.append(v)
-
-            elif isinstance(chk, NumericDriftCheck):
-                ref = chk.reference(spark) if chk.reference else reference_df
-                if ref is None:
-                    raise ValueError(f"drift check {chk.name}: no reference table")
-                psi = psi_numeric(df, ref, chk.expr(), chk.lo, chk.hi, chk.n_buckets)
-                v = psi.select(
-                    F.lit("*").alias("partition"),
-                    F.lit(chk.name).alias("column"),
-                    F.lit("psi_numeric").alias("check"),
-                    F.col("psi").alias("metric"),
-                    F.lit(float(chk.max_psi)).alias("threshold"),
-                    (F.col("psi") <= chk.max_psi).alias("passed"),
-                )
-                verdict_frames.append(v)
-            elif isinstance(chk, KSDriftCheck):
-                from data_check_spark.operators.drift import ks_statistic
-
-                ref = chk.reference(spark) if chk.reference else reference_df
-                if ref is None:
-                    raise ValueError(f"drift check {chk.name}: no reference table")
-                ks = ks_statistic(df, ref, chk.expr(), chk.lo, chk.hi, chk.n_buckets)
-                v = ks.select(
-                    F.lit("*").alias("partition"),
-                    F.lit(chk.name).alias("column"),
-                    F.lit("ks_numeric").alias("check"),
-                    F.col("ks").alias("metric"),
-                    F.lit(float(chk.max_ks)).alias("threshold"),
-                    (F.col("ks") <= chk.max_ks).alias("passed"),
-                )
-                verdict_frames.append(v)
-
-            elif isinstance(chk, KSDigestDriftCheck):
-                from data_check_spark.operators.drift import (
-                    _digest_arrays,
-                    _digest_arrays_pdf,
-                    ks_from_digest_arrays,
-                    psi_from_digest_arrays,
-                )
-                from data_check_spark.operators.sketch import (
-                    merge_tdigest,
-                    partition_tdigest,
-                )
-
-                def _one_digest_pdf(side: DataFrame):
-                    return merge_tdigest(
-                        partition_tdigest(
-                            side.select(chk.expr().alias("_v")), "_v", chk.delta
-                        ),
-                        chk.delta,
-                    ).toPandas()
-
-                # df-side digest: ONE collect serves the readout AND
-                # the persistable drift_digests rows
-                df_pdf = _one_digest_pdf(df)
-                a_df = _digest_arrays_pdf(df_pdf)
-                if len(df_pdf):
-                    digest_frames.append(
-                        spark.createDataFrame(
-                            df_pdf.assign(kind=chk.name)[
-                                ["kind", "mean", "weight", "vmin", "vmax", "is_edge"]
-                            ]
-                        )
-                    )
-                if reference_digest is not None and chk.reference is None:
-                    # stored baseline: ≤ ~2δ audit rows, the reference
-                    # version is never rescanned; a missing kind reads
-                    # as an empty digest → NULL stat → fails closed
-                    a_ref = _digest_arrays(
-                        reference_digest.filter(
-                            F.col("kind") == chk.name
-                        ).drop("kind")
-                    )
-                else:
-                    ref = chk.reference(spark) if chk.reference else reference_df
-                    if ref is None:
-                        raise ValueError(
-                            f"drift check {chk.name}: no reference table or digest"
-                        )
-                    a_ref = _digest_arrays_pdf(_one_digest_pdf(ref))
-                # ONE digest pair feeds both statistics (ref side first:
-                # PSI buckets are reference-equiprobable)
-                ks = ks_from_digest_arrays(a_ref, a_df)
-                # fail-closed: a NULL stat (an empty side) fails
-                rows = [
-                    ("*", chk.name, "ks_digest",
-                     ks, float(chk.max_ks), ks is not None and ks <= chk.max_ks)
-                ]
-                if chk.max_psi is not None:
-                    psi = psi_from_digest_arrays(a_ref, a_df, chk.n_psi_buckets)
-                    rows.append(
-                        ("*", chk.name, "psi_digest",
-                         psi, float(chk.max_psi), psi is not None and psi <= chk.max_psi)
-                    )
-                verdict_frames.append(
-                    spark.createDataFrame(
-                        rows,
-                        "partition string, column string, check string, "
-                        "metric double, threshold double, passed boolean",
-                    )
-                )
-
-            elif isinstance(chk, RepetitionCheck):
-                from data_check_spark.functions.textstats import repetition_metrics
-
-                keep = [part_s.alias("partition")] + (
-                    [F.col(chk.id_col)] if chk.id_col else []
-                )
-                rep = repetition_metrics(
-                    df.select(*keep, F.col(chk.text_col).alias("_text")),
-                    "_text",
-                )
-                aggs, th = [], []
-                if chk.max_mean_dup_2gram is not None:
-                    aggs.append(F.avg("dup_2gram_frac").alias("mean_dup_2gram"))
-                    th.append(("mean_dup_2gram", chk.max_mean_dup_2gram))
-                if chk.max_mean_top_2gram is not None:
-                    aggs.append(F.avg("top_2gram_frac").alias("mean_top_2gram"))
-                    th.append(("mean_top_2gram", chk.max_mean_top_2gram))
-                if th:
-                    per_part = rep.groupBy("partition").agg(*aggs)
-                    for metric_name, bound in th:
-                        m = F.round(F.col(metric_name), 6)
-                        verdict_frames.append(
-                            per_part.select(
-                                "partition",
-                                F.lit(chk.text_col).alias("column"),
-                                F.lit(f"repetition_{metric_name}").alias("check"),
-                                m.alias("metric"),
-                                F.lit(float(bound)).alias("threshold"),
-                                # NULL mean (all-NULL/too-short texts in
-                                # the partition) fails closed
-                                F.coalesce(m <= bound, F.lit(False)).alias("passed"),
-                            )
-                        )
-                if chk.id_col and chk.doc_dup_2gram_limit is not None:
-                    violations[f"repetition:{chk.text_col}"] = (
-                        rep.filter(F.col("dup_2gram_frac") > chk.doc_dup_2gram_limit)
-                        .orderBy(
-                            "partition", F.desc("dup_2gram_frac"), F.col(chk.id_col)
-                        )
-                        .limit(chk.violation_limit)
-                    )
-            elif isinstance(chk, NearDupCheck):
-                from data_check_spark.operators.components import duplicate_clusters
-                from data_check_spark.operators.dedup import minhash_lsh_pairs
-
-                pairs = minhash_lsh_pairs(
-                    df,
-                    text_col=chk.text_col,
-                    id_col=chk.id_col,
-                    shingle_k=chk.shingle_k,
-                    num_hashes=chk.num_hashes,
-                    bands=chk.bands,
-                    jaccard_threshold=chk.jaccard_threshold,
-                    max_bucket=chk.max_bucket,
-                    pair_mode=chk.pair_mode,
-                )
-                # eager: the contraction loop's convergence test is an
-                # action; everything below rereads checkpointed
-                # cluster-sized frames, never the corpus
-                nd = duplicate_clusters(pairs)
-                dropped = nd.filter(~F.col("is_exemplar")).agg(
-                    F.count(F.lit(1)).alias("_d")
-                )
-                tot = df.agg(F.count(F.col(chk.id_col)).alias("_t"))
-                m = F.round(F.try_divide(F.col("_d"), F.col("_t")), 6)
-                verdict_frames.append(
-                    dropped.crossJoin(tot).select(
-                        F.lit("*").alias("partition"),
-                        F.lit(chk.text_col).alias("column"),
-                        F.lit("neardup_frac").alias("check"),
-                        m.alias("metric"),
-                        F.lit(float(chk.max_neardup_frac)).alias("threshold"),
-                        # NULL metric (empty table) fails closed
-                        F.coalesce(
-                            m <= chk.max_neardup_frac, F.lit(False)
-                        ).alias("passed"),
-                    )
-                )
-                if chk.dump_violations:
-                    violations[f"neardup:{chk.text_col}"] = (
-                        nd.filter(~F.col("is_exemplar"))
-                        .orderBy("component", "id")
-                        .limit(chk.violation_limit)
-                    )
-            elif isinstance(chk, LMCheck):
-                from data_check_spark.operators.lm import bigram_lm_scores
-
-                scores = bigram_lm_scores(
-                    df.select(chk.id_col, chk.text_col),
-                    id_col=chk.id_col,
-                    text_col=chk.text_col,
-                )
-                outside = (F.col("mean_p") < chk.min_mean_p) | (
-                    F.col("mean_p") > chk.max_mean_p
-                )
-                sums = scores.agg(
-                    F.count_if(outside).alias("_d"), F.count(F.lit(1)).alias("_t")
-                )
-                m = F.round(F.try_divide(F.col("_d"), F.col("_t")), 6)
-                verdict_frames.append(
-                    sums.select(
-                        F.lit("*").alias("partition"),
-                        F.lit(chk.text_col).alias("column"),
-                        F.lit("lm_outlier_frac").alias("check"),
-                        m.alias("metric"),
-                        F.lit(float(chk.max_outlier_frac)).alias("threshold"),
-                        # NULL metric (no scorable docs) fails closed
-                        F.coalesce(
-                            m <= chk.max_outlier_frac, F.lit(False)
-                        ).alias("passed"),
-                    )
-                )
-                if chk.dump_violations:
-                    dist = F.greatest(
-                        F.lit(chk.min_mean_p) - F.col("mean_p"),
-                        F.col("mean_p") - F.lit(chk.max_mean_p),
-                    )
-                    violations[f"lm:{chk.text_col}"] = (
-                        scores.filter(outside)
-                        .orderBy(F.desc(dist), F.col(chk.id_col))
-                        .limit(chk.violation_limit)
-                    )
-            elif isinstance(chk, LineDupCheck):
-                from data_check_spark.operators.linededup import line_duplicate_stats
-
-                ld = line_duplicate_stats(
-                    df,
-                    id_col=chk.id_col,
-                    text_col=chk.text_col,
-                    min_docs=chk.min_docs,
-                    sep_regex=chk.sep_regex,
-                )
-                sums = ld.agg(
-                    F.sum("n_dup_lines").alias("_d"), F.sum("n_lines").alias("_t")
-                )
-                m = F.round(F.try_divide(F.col("_d"), F.col("_t")), 6)
-                verdict_frames.append(
-                    sums.select(
-                        F.lit("*").alias("partition"),
-                        F.lit(chk.text_col).alias("column"),
-                        F.lit("dup_line_frac").alias("check"),
-                        m.alias("metric"),
-                        F.lit(float(chk.max_dup_line_frac)).alias("threshold"),
-                        # NULL metric (empty/all-NULL table) fails closed
-                        F.coalesce(
-                            m <= chk.max_dup_line_frac, F.lit(False)
-                        ).alias("passed"),
-                    )
-                )
-                if chk.dump_violations:
-                    share = F.try_divide(F.col("n_dup_lines"), F.col("n_lines"))
-                    violations[f"linedup:{chk.text_col}"] = (
-                        ld.filter(F.col("n_dup_lines") > 0)
-                        .withColumn("dup_line_frac", F.round(share, 6))
-                        .orderBy(
-                            F.desc("dup_line_frac"),
-                            F.desc("n_dup_lines"),
-                            F.col(chk.id_col),
-                        )
-                        .limit(chk.violation_limit)
-                    )
-            elif isinstance(chk, SchemaCheck):
-                # driver-side (df.schema is free — ref O2 dry-run);
-                # row filters never change a schema, so the verdict is
-                # resume-invariant without drift-style special-casing
-                types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-                rows = []
-                for name, want in sorted(chk.expected.items()):
-                    got = types.get(name)
-                    rows.append((
-                        "*", name,
-                        "schema" if got is not None else "schema_missing",
-                        1.0 if got == want else 0.0, 1.0, got == want,
-                    ))
-                if chk.exact:
-                    for name in sorted(set(types) - set(chk.expected)):
-                        rows.append(("*", name, "schema_unexpected", 0.0, 1.0, False))
-                verdict_frames.append(
-                    spark.createDataFrame(
-                        rows,
-                        "partition string, column string, check string, "
-                        "metric double, threshold double, passed boolean",
-                    )
-                )
-            elif isinstance(chk, (FingerprintCheck, ProfileCheck)):
-                pass  # computed in/alongside the fused profile pass
-            else:
-                raise TypeError(f"unknown check type: {type(chk)}")
-
-        if not verdict_frames:
-            # legal for a lineage-only suite (just a FingerprintCheck):
-            # empty verdicts, passed() trivially True
-            verdict_frames.append(
-                spark.createDataFrame(
-                    [],
-                    "partition string, column string, check string, "
-                    "metric double, threshold double, passed boolean",
-                )
-            )
-        verdicts = verdict_frames[0]
-        for v in verdict_frames[1:]:
-            verdicts = verdicts.unionByName(v)
-        return SuiteResult(
-            run_id,
-            verdicts.orderBy("partition", "check", "column"),
-            violations,
-            cached,
-            fingerprints=fingerprints,
-            drift_profile=drift_profile_df,
-            drift_digests=_union_all(digest_frames),
+        run = self._plan(
+            spark, df, part.cast("string"), reference_df=reference_df,
+            reference_profile=reference_profile, reference_digest=reference_digest,
         )
+        acts = [run.shared_actions(), *(chk.plan(run) for chk in self.checks)]
+        # Phase 1: every expensive input is an independent Spark action
+        # that reduces to a SMALL result (bounded by partitions,
+        # buckets or violations, not data size). Running them from one
+        # thread pool overlaps their job latencies on the shared
+        # executors: the latency-bound phases (shuffle stage barriers,
+        # AQE re-plans, broadcast builds) hide behind the compute-bound
+        # stats scan instead of adding to it serially.
+        with ThreadPoolExecutor(max_workers=6) as pool:
+            futs = [
+                {k: pool.submit(v) if callable(v) else v for k, v in a.items()}
+                for a in acts
+            ]
+            got = [
+                {k: f.result() if isinstance(f, Future) else f for k, f in fs.items()}
+                for fs in futs
+            ]
+        # Phase 2: driver-side verdict rows; violation frames stay lazy
+        run.absorb(got[0])
+        rows: list[tuple] = []
+        violations: dict[str, DataFrame] = {}
+        for chk, mine in zip(self.checks, got[1:]):
+            rows += chk.verdict_rows(run, mine)
+            violations.update(chk.violations(run, mine))
+        rows.sort(key=_spark_order)
+        result = SuiteResult(
+            run_id or uuid.uuid4().hex[:12],
+            spark.createDataFrame(rows, VERDICT_SCHEMA),
+            violations,
+            run.cached,
+            fingerprints=run.fingerprint_frame(),
+            drift_profile=run.profile_frame(),
+            drift_digests=run.digest_frame(),
+        )
+        return result, rows, run
 
     def run_resumable(
         self,
@@ -1839,50 +284,26 @@ class CheckSuite:
         scope_pred = part_s.isin([p for p in pending if p is not None])
         if any(p is None for p in pending):
             scope_pred = scope_pred | part_s.isNull()
-        scoped = df.filter(scope_pred)
-        # drift and compare checks are global (partition='*'): run them
-        # over the UNFILTERED table so a resumed run reports the same
-        # verdict as an uninterrupted one — scoping them to pending
-        # partitions would make the answer depend on crash state
-        _GLOBAL = (
-            CategoricalDriftCheck,
-            NumericDriftCheck,
-            KSDriftCheck,
-            KSDigestDriftCheck,
-            CompareCheck,
-            NearDupCheck,
-            LineDupCheck,
-            LMCheck,
-            ProfileCheck,
+        # global checks (drift, compare, corpus gates…) run over the
+        # UNFILTERED table so a resumed run reports the same verdict as
+        # an uninterrupted one — scoping them to pending partitions
+        # would make the answer depend on crash state
+        scoped = [c for c in self.checks if c.scope == "partition"]
+        whole = [c for c in self.checks if c.scope == "global"]
+        refs = (reference_df, run_id, reference_profile, reference_digest)
+        result, rows, run = CheckSuite(scoped or whole)._run(
+            spark, df.filter(scope_pred) if scoped else df, partition_col, *refs
         )
-        drift_checks = [c for c in self.checks if isinstance(c, _GLOBAL)]
-        scoped_checks = [c for c in self.checks if not isinstance(c, _GLOBAL)]
-        result = CheckSuite(scoped_checks or drift_checks).run(
-            spark,
-            scoped if scoped_checks else df,
-            partition_col,
-            reference_df,
-            run_id,
-            reference_profile=reference_profile,
-            reference_digest=reference_digest,
-        )
-        if scoped_checks and drift_checks:
-            dres = CheckSuite(drift_checks).run(
-                spark, df, partition_col, reference_df, run_id,
-                reference_profile=reference_profile,
-                reference_digest=reference_digest,
-            )
-            result.verdicts = result.verdicts.unionByName(dres.verdicts)
-            result.violations.update(dres.violations)
-            result.cached.extend(dres.cached)
-            result.drift_profile = dres.drift_profile
-            result.drift_digests = dres.drift_digests
-        verdicts = result.verdicts.cache()
-        result.cached.append(verdicts)  # released by SuiteResult.unpersist()
-        result.verdicts = verdicts
-        verdicts.count()
+        if scoped and whole:
+            wres, wrows, _ = CheckSuite(whole)._run(spark, df, partition_col, *refs)
+            rows = rows + wrows
+            result.verdicts = spark.createDataFrame(rows, VERDICT_SCHEMA)
+            result.violations.update(wres.violations)
+            result.cached.extend(wres.cached)
+            result.drift_profile = wres.drift_profile
+            result.drift_digests = wres.drift_digests
         if audit_path:
-            write_audit(verdicts, f"{audit_path}/verdicts", run_id, "verdict")
+            write_audit(result.verdicts, f"{audit_path}/verdicts", run_id, "verdict")
             if result.drift_profile is not None:
                 # |categories| + |buckets| rows: the stored baseline
                 # the NEXT version drifts against without rescanning
@@ -1926,17 +347,15 @@ class CheckSuite:
                     run_id,
                     name,
                 )
-        summary = {
-            r["partition"]: {"checks": int(r["n"]), "failed": int(r["failed"])}
-            for r in verdicts.groupBy("partition")
-            .agg(F.count("*").alias("n"), F.count_if(~F.col("passed")).alias("failed"))
-            .collect()
-        }
+        summary: dict = {}
+        for r in rows:
+            s = summary.setdefault(r[0], {"checks": 0, "failed": 0})
+            s["checks"] += 1
+            s["failed"] += not r[5]
         if result.fingerprints is not None:
             # content lineage: fingerprints land in the audit table
             # (the baseline changed_partitions_vs_audit diffs against)
-            # and in each partition's manifest record — |partitions|
-            # tiny rows, the collect is metadata-sized
+            # and in each partition's manifest record
             if audit_path:
                 write_audit(
                     result.fingerprints,
@@ -1944,11 +363,11 @@ class CheckSuite:
                     run_id,
                     "fingerprint",
                 )
-            for r in result.fingerprints.collect():
+            for r in run.pass_rows:
                 summary.setdefault(r["partition"], {})["fingerprint"] = {
-                    "n_rows": int(r["n_rows"]),
-                    "fp_lo": str(r["fp_lo"]),
-                    "fp_hi": str(r["fp_hi"]),
+                    "n_rows": int(r["_fpn"]),
+                    "fp_lo": str(r["_fp_lo"]),
+                    "fp_hi": str(r["_fp_hi"]),
                 }
         for p in pending:
             # verdict rows key the NULL partition as None, not "None"

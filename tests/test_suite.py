@@ -1160,3 +1160,64 @@ def test_profile_check_resume_matches_uninterrupted(spark, pages, tmp_path):
     assert got[0]["metric"] == expected["metric"]
     assert got[0]["passed"] == expected["passed"]
     full.unpersist(); res.unpersist()
+
+
+def _job_ids(spark) -> set:
+    """Ids of every job the session has started, once the listener bus
+    has caught up (suite jobs run from threads without a job group)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_stats_null_metric_fails_closed(spark):
+    """A stats threshold whose metric is NULL — n_distinct of a BINARY
+    column is never computed — must FAIL, and so must the partition's
+    ('*', 'all') summary row and SuiteResult.passed()."""
+    df = spark.createDataFrame(
+        [("p1", bytearray(b"a")), ("p1", bytearray(b"b")), ("p2", None)],
+        "part string, blob binary",
+    )
+    res = CheckSuite([StatsCheck({"blob": {"min_distinct": 5}})]).run(spark, df, "part")
+    rows = {(r["partition"], r["column"], r["check"]): r for r in res.verdicts.collect()}
+    for p in ("p1", "p2"):
+        assert rows[(p, "blob", "min_distinct")]["metric"] is None
+        assert rows[(p, "blob", "min_distinct")]["passed"] is False
+        assert rows[(p, "*", "all")]["metric"] == 1.0
+        assert rows[(p, "*", "all")]["passed"] is False
+    assert not res.passed()
+
+
+def test_verdicts_collect_runs_at_most_one_job(spark, pages, suite):
+    """Verdict rows are computed on the driver during run(): collecting
+    them reads one local relation instead of re-running Spark joins,
+    unions and a sort over Phase 1's results."""
+    from data_check_spark.plans.suite import CompareCheck
+
+    v2 = synth_pages_v2(spark, N)
+    s = CheckSuite(
+        suite.checks
+        + [
+            CompareCheck("diff", pk="url", columns=["text", "lang"]),
+            CategoricalDriftCheck(column="lang", max_psi=0.2),
+        ]
+    )
+    res = s.run(spark, pages, "warc_day", reference_df=v2)
+    before = _job_ids(spark)
+    rows = res.verdicts.collect()
+    new = {j for j in _job_ids(spark) if j > max(before, default=-1)}
+    assert len(new) <= 1
+    assert {r["check"] for r in rows} >= {
+        "unique", "refint", "all", "psi_categorical", "ratio_equal", "pk_missing_ratio_1",
+    }
+    # sorted like Spark's ascending orderBy("partition", "check", "column")
+    keys = [(r["partition"], r["check"], r["column"]) for r in rows]
+    assert keys == sorted(keys, key=lambda k: tuple((v is not None, v) for v in k))
+    res.unpersist()
+
+
+def test_unknown_check_type_rejected_before_any_job(spark, pages):
+    s = CheckSuite([StatsCheck({"text": {"max_null_rate": 0.05}}), object()])
+    before = _job_ids(spark)
+    with pytest.raises(TypeError, match="unknown check type"):
+        s.run(spark, pages, "warc_day")
+    assert {j for j in _job_ids(spark) if j > max(before, default=-1)} == set()
