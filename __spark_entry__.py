@@ -546,41 +546,23 @@ def _q_fingerprint(spark, sf_dir):
     return d.select("doc_id", bag_of_words_fingerprint(F.col("text")).alias("fp"))
 
 
-def events_hourly_frame(e, deterministic: bool = True):
+def events_hourly_frame(e):
     """Hourly rollup over an events-shaped frame (ts, event_type,
-    value). Two modes:
-
-    ``deterministic=True`` (default; the oracle-parity form): each
-    value is quantized to 1e-6 and summed as decimal (exact,
-    associative), so the aggregate is independent of accumulation
-    order. Plain avg(double) differs between engines (and between
-    partitionings) by a few ulps of summation-reorder error — at
-    sf0.1 that straddled the 4-dp rounding boundary on ~0.1% of
-    groups (caught by the r4 sf0.1 oracle sweep). Decimal sum, not
-    int64: at 10^12 rows an int64 of 1e-6-scaled values overflows.
-    ASSUMES values carry ≤6 decimal places (true of the testdata
-    generator): for such values round(value*1e6) is exact in both
-    engines. A value with MORE precision landing exactly on a .5
-    multiple of 1e-6 could round differently by 1 ulp between Spark
-    (shortest-decimal-repr HALF_UP) and DuckDB (true-binary rounding)
-    — widen the quantum if the source ever gains precision.
-
-    ``deterministic=False`` (the hot-production form): plain double
-    sum/avg — measurably faster (decimal aggregation buffers are
-    128-bit and unvectorized; A/B at 20M rows:
-    BENCH/AB_EVENTS_HOURLY.jsonl) and correct to float ulps, but its
-    low digits depend on partitioning, so it cannot be hash-compared
-    across engines or runs."""
+    value), in the oracle-parity form: each value is quantized to 1e-6
+    and summed as decimal (exact, associative), so the aggregate is
+    independent of accumulation order. Plain avg(double) differs
+    between engines (and between partitionings) by a few ulps of
+    summation-reorder error — at sf0.1 that straddled the 4-dp
+    rounding boundary on ~0.1% of groups (caught by the r4 sf0.1
+    oracle sweep). Decimal sum, not int64: at 10^12 rows an int64 of
+    1e-6-scaled values overflows. ASSUMES values carry ≤6 decimal
+    places (true of the testdata generator): for such values
+    round(value*1e6) is exact in both engines. A value with MORE
+    precision landing exactly on a .5 multiple of 1e-6 could round
+    differently by 1 ulp between Spark (shortest-decimal-repr
+    HALF_UP) and DuckDB (true-binary rounding) — widen the quantum if
+    the source ever gains precision."""
     g = e.groupBy(F.date_trunc("hour", "ts").alias("hour"), F.col("event_type"))
-    if not deterministic:
-        return (
-            g.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.avg("value"), 4).alias("avg_value"),
-                F.round(F.sum("value"), 2).alias("sum_value"),
-            )
-            .orderBy("hour", "event_type")
-        )
     g = g.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.round(F.col("value") * 1e6).cast("decimal(25,0)")).alias("_s"),
@@ -613,7 +595,7 @@ def _q_events_hourly(spark, sf_dir):
     e = spread_cpu(
         _t(spark, sf_dir, "events").select("ts", "event_type", "value"), "ts"
     )
-    return events_hourly_frame(e, deterministic=True)
+    return events_hourly_frame(e)
 
 
 def _q_asof_join(spark, sf_dir):
@@ -3019,9 +3001,10 @@ SELECT '*', "column", 'ratio_equal', ratio_equal, 0.95,
        coalesce(ratio_equal >= 0.95, FALSE) FROM rat""",
         # GENUINE exact twin for the LSH path: recall on the seeded
         # sf0.01 data is exactly 1.0 (verified by
-        # scripts/exp_lsh_oracle.py — deterministic signatures), so the
-        # banded-LSH candidate generation + exact-Jaccard verification
-        # must reproduce the exact all-pairs answer bit-for-bit.
+        # scripts/exp_lsh_oracle.py @ 415cb3d — deterministic
+        # signatures), so the banded-LSH candidate generation +
+        # exact-Jaccard verification must reproduce the exact
+        # all-pairs answer bit-for-bit.
         "minhash_incremental": r"""
 SELECT count(*) AS n_planted, TRUE AS planted_all_found
 FROM documents

@@ -133,9 +133,9 @@ def add_text_metrics(df, text_col: str = "text", keep: list[str] | None = None):
     appears 3x across quality+mean_word_length+token_count, the
     non-space count 3x) sit under CaseWhen/try_divide branches, where
     Spark's codegen subexpression elimination does NOT dedupe them.
-    Measured (scripts/profile_textfuse.py, 1M pages, local[16],
-    median-of-3): three separate scans 93.8 µs/row; all metrics in one
-    NAIVE select 132.8 µs/row (worse than separate — the duplicated
+    Measured (scripts/profile_textfuse.py @ 415cb3d, 1M pages,
+    local[16], median-of-3): three separate scans 93.8 µs/row; all
+    metrics in one NAIVE select 132.8 µs/row (worse than separate — the duplicated
     subtrees multiply); this two-stage form 33.6 µs/row (2.8x over
     separate) vs a 20.9 µs/row raw-counter floor.
 
@@ -334,8 +334,9 @@ def repetition_metrics(df, text_col: str = "text", id_cols: list[str] | None = N
     array is bound once in a lower Project (referenced 4x — Catalyst
     keeps the stage uncollapsed, same mechanism as add_text_metrics)
     so the split+lower runs once per row. Measured 24.5 µs/row for all
-    five metrics (bench.py, sf0.1 documents ~30-token rows, local[32])
-    — cheaper than one separate regex-metric scan (93.8/3 ≈ 31)."""
+    five metrics (bench.py @ 415cb3d, sf0.1 documents ~30-token rows,
+    local[32]) — cheaper than one separate regex-metric scan
+    (93.8/3 ≈ 31)."""
     id_cols = [c for c in df.columns if c != text_col] if id_cols is None else list(id_cols)
     t = F.col(text_col)
     toks = df.select(*id_cols, t.alias("_t"), word_tokens(t).alias("_w"))

@@ -28,8 +28,7 @@ division of exact integers, bit-identical in any engine. The float
 ``avg_neg_log2p`` / ``perplexity`` columns (opt-in) are the
 practical CCNet ranking signal but go through ``log2`` — Java and
 libm may differ in the last ulp, so they are documented
-non-hash-comparable, exactly like events_hourly's
-``deterministic=False`` mode.
+non-hash-comparable.
 
 Scale (10¹² docs): one tokenize+explode pass produces the bigram
 frame; ``localCheckpoint`` (opt-out ``checkpoint=False``) pins it so
@@ -50,8 +49,8 @@ Doc-id width dominates the bigram frame (O(tokens) rows each
 carrying the id): keying by a ~36-char url string instead of an
 8-byte int64 triples the checkpoint footprint — measured at 1M docs
 × ~134 tokens, the url-keyed run OOMs a 32 GB single-JVM heap while
-the xxhash64(url)-keyed run fits (scripts/ab_lm.py). At production
-scale map urls to int64 ids before scoring and join the scores back.
+the xxhash64(url)-keyed run fits (scripts/ab_lm.py @ 415cb3d). At
+production scale map urls to int64 ids before scoring and join the scores back.
 """
 
 from __future__ import annotations

@@ -128,7 +128,8 @@ def exclusive_rows(
     ``models/table.py:48-50``) suffixed ``__1``/``__2`` per side."""
     a, b = (df1, df2) if side == 1 else (df2, df1)
     # build-side dropDuplicates A/B'd at 20M urls (~2% dups;
-    # scripts/ab_exclusive_dedup.py, BENCH/AB_EXCLUSIVE_DEDUP.jsonl):
+    # scripts/ab_exclusive_dedup.py @ 415cb3d,
+    # BENCH/AB_EXCLUSIVE_DEDUP.jsonl @ 415cb3d):
     # 13.4 s with vs 12.9 s without — a wash within run spread on the
     # common near-unique pk. Kept: the anti-join is indifferent to
     # duplicate build keys, but on a heavily duplicated build side the

@@ -94,8 +94,8 @@ def _metric_struct(
         p50 = p90 = p99 = null_lit("double")
     if "avg_tokens" in metrics and isinstance(dtype, T.StringType):
         # Two-tier token counting. Measured per-row costs on ~800-char
-        # pages at local[32] (scripts/profile_tokens.py + the 20M A/B
-        # below): regexp_count(`\S+`) ≈ 27µs/row (Java regex NFA),
+        # pages at local[32] (scripts/profile_tokens.py @ 415cb3d + the
+        # 20M A/B below): regexp_count(`\S+`) ≈ 27µs/row (Java regex NFA),
         # each chained replace() ≈ 10µs/row (it REBUILDS the string —
         # an earlier version normalized \t\n\r with 3 unconditional
         # replaces and cost +29 core-µs/row, +290 s on the 20M-page

@@ -509,13 +509,6 @@ class ReferentialCheck(Check):
     # ceiling for url-keyed snapshots) at a 64-bit-collision-bounded
     # false-negative rate; see operators/refint.referential_violations
     hash_keys: bool = False
-    # retained for API compatibility; the current engine aggregates the
-    # fact side to (partition, ref_key) counts before the anti-join,
-    # which is cheaper than riding the uniqueness exchange was (the
-    # derived path forced the uniqueness shuffle to carry full key
-    # strings; 8-byte hash keys + an independent pre-aggregated refint
-    # scan measured faster at both parallelism levels)
-    derived_from_key: str | None = None
     # 'join' (default): exact anti-join of the per-key aggregate —
     # that aggregate's shuffle carries every DISTINCT fact key, which
     # for a url-keyed fact table is the whole key set. 'bloom': the
@@ -1268,8 +1261,8 @@ class FingerprintCheck(Check):
     Scale: one projected md5 plus three aggregates riding the fused
     groupBy(partition) stats pass (which runs for this check alone
     when nothing else feeds it). Honest cost note
-    (scripts/ab_fingerprint.py, 20M pages): the md5 over the encoded
-    row IS the cost — it dwarfs the saved second scan on a
+    (scripts/ab_fingerprint.py @ 415cb3d, 20M pages): the md5 over the
+    encoded row IS the cost — it dwarfs the saved second scan on a
     page-cache-hot single box (fused vs two-pass measured ~even: 41.4
     vs 41.9 s at 8 cores, 13.6 vs 14.6 s at 32); the fusion win is the
     avoided second READ, which matters exactly when scans are

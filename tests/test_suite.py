@@ -62,33 +62,6 @@ def test_suite_run(spark, pages, suite):
     assert ref.count() > 0
 
 
-def test_fused_uniq_refint_matches_unfused(spark, pages, suite):
-    """derived_from_key fusion (one url shuffle for uniqueness +
-    referential) must produce byte-identical verdicts and violations
-    to the independent-scan path."""
-    import dataclasses
-
-    fused = CheckSuite(
-        [
-            dataclasses.replace(c, derived_from_key="url")
-            if isinstance(c, ReferentialCheck) else c
-            for c in suite.checks
-        ]
-    )
-    r1 = suite.run(spark, pages, "warc_day")
-    r2 = fused.run(spark, pages, "warc_day")
-    v1 = sorted(map(tuple, r1.verdicts.collect()))
-    v2 = sorted(map(tuple, r2.verdicts.collect()))
-    assert v1 == v2
-    d1 = sorted(map(tuple, r1.violations["unique:url"].collect()))
-    d2 = sorted(map(tuple, r2.violations["unique:url"].collect()))
-    assert d1 == d2
-    f1 = sorted(map(tuple, r1.violations["refint:domain_in_snapshot"].collect()))
-    f2 = sorted(map(tuple, r2.violations["refint:domain_in_snapshot"].collect()))
-    assert f1 == f2
-    r1.unpersist(); r2.unpersist()
-
-
 def test_suite_with_drift(spark, pages, suite):
     v2 = synth_pages_v2(spark, N)
     # ~10% of rows get a shifted lang in v2 → PSI ≈ 0.02 (null buckets
