@@ -121,17 +121,6 @@ def word_shingles(text_col: Column, k: int = 3) -> Column:
 _MERSENNE = (1 << 31) - 1
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32, seed: int = 42) -> Column:
-    """MinHash signature via the standard affine-permutation trick:
-    hash every shingle ONCE with xxhash64, then derive the i-th
-    permutation as (a_i·h + b_i) mod p — one expensive pass instead
-    of num_hashes passes over the shingle array. Arithmetic is kept
-    under 2^62 (h reduced mod p first) so ANSI-mode overflow checks
-    never trip. Empty shingle sets yield NULL mins."""
-    base = shingle_base_hashes(shingles)
-    return minhash_from_base(base, num_hashes, seed)
-
-
 def shingle_base_hashes(shingles: Column) -> Column:
     """xxhash64 of each shingle, reduced mod p — compute ONCE and bind
     to a column before feeding minhash_from_base (HOF lambdas
@@ -140,6 +129,12 @@ def shingle_base_hashes(shingles: Column) -> Column:
 
 
 def minhash_from_base(base: Column, num_hashes: int = 32, seed: int = 42) -> Column:
+    """MinHash signature via the standard affine-permutation trick:
+    each shingle is hashed ONCE (shingle_base_hashes), then the i-th
+    permutation is (a_i·h + b_i) mod p — one expensive pass instead of
+    num_hashes passes over the shingle array. Arithmetic stays under
+    2^62 (h is already reduced mod p) so ANSI-mode overflow checks
+    never trip. Empty shingle sets yield NULL mins."""
     import random
 
     rng = random.Random(seed)
@@ -718,13 +713,15 @@ def minhash_pairs_against(
     new_sigs = minhash_signatures(
         new_df, text_col, id_col, shingle_k, num_hashes, seed
     ).localCheckpoint()
-    # checkpoint both banded sides (skinny (id, band, bucket) rows):
+    # checkpoint the new banded side (skinny (id, band, bucket) rows):
     # the combined `sizes` union below is a separate subtree that
-    # would otherwise re-run the new side's whole shingle+minhash
-    # pipeline (and re-read the stored signatures) once more for the
-    # hot-bucket broadcast build — see minhash_lsh_pairs
+    # would otherwise re-band it once more for the hot-bucket
+    # broadcast build — see minhash_lsh_pairs. The stored side stays
+    # lazy for the reason above: the union and the candidate join
+    # each re-read the signature table, and a lost executor can
+    # recompute it from there.
     bn = banded(new_sigs, "new").localCheckpoint()
-    bs = banded(stored_sigs, "stored").localCheckpoint()
+    bs = banded(stored_sigs, "stored")
     # hot-bucket hygiene across BOTH sides: a boilerplate bucket costs
     # m_new × m_stored candidate pairs on one reducer
     sizes = (

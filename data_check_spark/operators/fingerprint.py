@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.audit import latest_run, write_audit
 from .rowdiff import row_diff
 
 _LANES = ((1, "lo"), (16, "hi"))  # (hex start pos, lane suffix); 15 chars each
@@ -175,8 +176,6 @@ def fingerprint_to_audit(
     table (plans/audit.py sink — Iceberg on a real cluster, parquet
     here). A later run diffs against these rows instead of rescanning
     this version: `changed_partitions_vs_audit`."""
-    from ..plans.audit import write_audit
-
     fp = partition_fingerprint(df, partition_col, cols)
     write_audit(fp, audit_path, run_id, kind="fingerprint", fmt=fmt)
     return fp
@@ -194,12 +193,12 @@ def changed_partitions_vs_audit(
     a prior run persisted via `fingerprint_to_audit` — the old table
     version is never re-read (at 100 TB that halves the dominant
     cost of every incremental validation). ``run_id`` picks the
-    baseline run; default is the latest audit row per partition.
+    baseline run; default is the newest run (plans/audit.latest_run).
     Statuses read from the CURRENT table's perspective: 'added' =
     partition new in ``df``, 'removed' = gone from ``df``.
 
-    The default baseline is the latest stored RUN as a whole (newest
-    audit_ts), not the latest row per partition — the latter would
+    The default baseline is the latest stored RUN as a whole, not the
+    latest row per partition — the latter would
     resurrect partitions that an intermediate run already dropped and
     report them 'removed' forever.
 
@@ -213,14 +212,9 @@ def changed_partitions_vs_audit(
         if fmt == "iceberg"
         else spark.read.parquet(audit_path)
     ).filter(F.col("audit_kind") == "fingerprint")
-    if run_id is None:
-        # the audit frame is |partitions| × |runs| tiny rows — a
-        # driver readout of the newest run id is free
-        latest = stored.orderBy(F.desc("audit_ts"), F.desc("run_id")).first()
-        if latest is None:
-            raise ValueError(f"no fingerprint audit rows under {audit_path}")
-        run_id = latest["run_id"]
-    base = stored.filter(F.col("run_id") == run_id).select(
+    # the audit frame is |partitions| × |runs| tiny rows — a driver
+    # readout of the newest run id is free
+    base = latest_run(stored, audit_path, run_id).select(
         "partition", "n_rows", "fp_lo", "fp_hi"
     )
     return _compare_fingerprints(base, partition_fingerprint(df, partition_col, cols))

@@ -19,8 +19,7 @@ frame, so Catalyst evaluates them in a single Window operator — the
 same plan shape as the as-of join. A hot key lands on one task like
 any per-key window; events streams are keyed by user/device, whose
 cardinality grows with data size, so partitions stay balanced at
-scale (the streaming twin with watermark state is
-streaming/checks.py's territory).
+scale.
 
 Exact-timestamp ties within a key cannot flip session assignment (the
 gap between equal timestamps is 0 regardless of order), but a

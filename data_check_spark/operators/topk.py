@@ -1,7 +1,7 @@
 """Heavy hitters — exact top-k keys by count, globally or per group.
 
 The diagnostic half of the skew story: the engine's keyed operators
-(uniqueness salting, streaming dedup buckets, AQE skew joins) *defend*
+(uniqueness salting, AQE skew joins) *defend*
 against hot keys; this operator *reports* them — "which domains carry
 the most pages", "which users fire the most events" — so a pipeline
 owner can see the skew the defenses are absorbing.

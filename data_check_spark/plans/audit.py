@@ -34,3 +34,16 @@ def write_audit(
             stamped.writeTo(path_or_table).create()
     else:
         stamped.write.mode("append").parquet(path_or_table)
+
+
+def latest_run(stored: DataFrame, path: str, run_id: str | None = None) -> DataFrame:
+    """The rows of one run of an audit table: ``run_id`` when given,
+    else the newest run — the largest ``audit_ts``, ties going to the
+    larger ``run_id``. Raises ``ValueError`` naming ``path`` when the
+    table holds no rows to pick from."""
+    if run_id is None:
+        newest = stored.orderBy("audit_ts", "run_id", ascending=False).select("run_id").first()
+        if newest is None:
+            raise ValueError(f"no audit rows under {path}")
+        run_id = newest["run_id"]
+    return stored.filter(F.col("run_id") == run_id)

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_check_spark.operators.stats import column_stats
+from data_check_spark.plans.audit import latest_run, write_audit
 
 _SUGGESTION_COLS = ("column", "check_kind", "param", "value", "observed", "rationale")
 
@@ -234,22 +235,15 @@ def persist_suggestions(
     the same stored-baseline pattern as drift profiles / schemas /
     digests, so onboarding decisions are reviewable and the next run
     can rebuild its suite from them without re-profiling."""
-    from data_check_spark.plans.audit import write_audit
-
     write_audit(suggestions, f"{audit_path}/suggestions", run_id, "suggestion", fmt)
 
 
 def suggestions_from_audit(spark: SparkSession, audit_path: str) -> DataFrame:
     """The LATEST stored suggestion set from
-    ``{audit_path}/suggestions`` (max audit_ts run wins — same
-    convention as schema_from_audit). Raises if nothing is stored."""
-    stored = spark.read.parquet(f"{audit_path}/suggestions")
-    last = stored.orderBy(F.col("audit_ts").desc()).select("run_id").first()
-    if last is None:
-        raise ValueError(f"no stored suggestions under {audit_path}/suggestions")
-    return stored.filter(F.col("run_id") == last["run_id"]).select(
-        *_SUGGESTION_COLS
-    )
+    ``{audit_path}/suggestions`` (the newest run, plans/audit.py
+    ``latest_run``). Raises if nothing is stored."""
+    path = f"{audit_path}/suggestions"
+    return latest_run(spark.read.parquet(path), path).select(*_SUGGESTION_COLS)
 
 
 def suite_from_suggestions(suggestions: DataFrame, *, approx: bool = True):

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from data_check_spark.operators.drift import drift_profile
 from data_check_spark.operators.stats import VERDICT_SCHEMA
-from data_check_spark.plans.audit import write_audit
+from data_check_spark.plans.audit import latest_run, write_audit
 from data_check_spark.plans.checks import (  # noqa: F401  (the suite's public check kinds)
     CategoricalDriftCheck,
     Check,
@@ -387,10 +387,7 @@ def drift_profile_from_audit(
     recent append. Metadata-sized read: |categories| + |buckets| rows
     per run — drift vs the previously-validated 100 TB version never
     touches that version's data again."""
-    prof = spark.read.parquet(path)
-    if run_id is None:
-        run_id = prof.orderBy(F.desc("audit_ts")).select("run_id").first()["run_id"]
-    return prof.filter(F.col("run_id") == run_id).select("kind", "key", "freq")
+    return latest_run(spark.read.parquet(path), path, run_id).select("kind", "key", "freq")
 
 
 def schema_from_audit(
@@ -400,12 +397,9 @@ def schema_from_audit(
     ``SchemaCheck.expected`` mapping — with ``exact=True`` this gates
     schema DRIFT between table versions (new/dropped/retyped columns)
     against the last validated run, no old table needed."""
-    sch = spark.read.parquet(path)
-    if run_id is None:
-        run_id = sch.orderBy(F.desc("audit_ts")).select("run_id").first()["run_id"]
     return {
         r["column"]: r["dtype"]
-        for r in sch.filter(F.col("run_id") == run_id).collect()
+        for r in latest_run(spark.read.parquet(path), path, run_id).collect()
     }
 
 
@@ -416,9 +410,6 @@ def drift_digest_from_audit(
     drift_digests`` for ``run(reference_digest=...)`` — the digest
     twin of ``drift_profile_from_audit`` (≤ ~2δ rows per check kind;
     the previously-validated version is never rescanned)."""
-    dig = spark.read.parquet(path)
-    if run_id is None:
-        run_id = dig.orderBy(F.desc("audit_ts")).select("run_id").first()["run_id"]
-    return dig.filter(F.col("run_id") == run_id).select(
+    return latest_run(spark.read.parquet(path), path, run_id).select(
         "kind", "mean", "weight", "vmin", "vmax", "is_edge"
     )

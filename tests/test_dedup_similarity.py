@@ -483,3 +483,28 @@ def test_exact_dedup_against_stored_hashes(spark, tmp_path):
     r = got[0]
     assert r["id_new"] == 100 and r["n_stored"] == 4
     assert r["stored_ids"].split(",") == ["3", "10", "17", "24"]
+
+
+def test_minhash_pairs_against_keeps_stored_side_lazy(spark, tmp_path):
+    """The stored signature table is re-read, never materialized: the
+    banding side of the optimized plan scans the parquet table just as
+    the est_jaccard re-attach does, and no checkpointed RDD of banded
+    stored rows appears."""
+    import re
+
+    from data_check_spark.operators.dedup import minhash_pairs_against, minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox {i} jumps over the lazy dog") for i in range(20)],
+        "doc_id bigint, text string",
+    )
+    sig_path = str(tmp_path / "stored_sigs")
+    minhash_signatures(docs).write.parquet(sig_path)
+    stored = spark.read.parquet(sig_path)
+    pairs = minhash_pairs_against(docs.filter("doc_id < 3"), stored, est_threshold=0.3)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD [id_stored" not in plan
+    banding = re.search(r"AS id_stored#\d+L, bb#", plan)
+    reattach = re.search(r"AS id_stored#\d+L, sig#\d+ AS _sb", plan)
+    assert banding and reattach
+    assert len(re.findall(r"Relation \[id#\d+L,sig#\d+\] parquet", plan)) >= 2

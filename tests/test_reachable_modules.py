@@ -1,0 +1,71 @@
+"""Every module of the package is reachable from a product entry point.
+
+The product roots are the CLI (``runner.py``), the suite API
+(``plans/suite.py``), the driver contract (``__spark_entry__.py``), the
+benchmark (``perfbench/*.py``) and the parity gate
+(``scripts/check_parity.py``). The walk follows ``import`` and
+``from … import`` statements anywhere in a file, lazy imports inside
+functions included, using ``ast`` only (nothing is imported). It does
+not follow the imports of a package ``__init__.py``: a re-export does
+not make a module part of a product path. A package counts as reached
+when any of its submodules is. A module that only its own tests import
+fails this test; delete it or wire it into a product path."""
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = "data_check_spark"
+
+
+def _product_roots():
+    return [
+        ROOT / PKG / "runner.py",
+        ROOT / PKG / "plans" / "suite.py",
+        ROOT / "__spark_entry__.py",
+        *sorted((ROOT / "perfbench").glob("*.py")),
+        ROOT / "scripts" / "check_parity.py",
+    ]
+
+
+def _dotted(path):
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported_names(path):
+    """Every dotted name an import in ``path`` may refer to: the module
+    of each import, plus ``module.name`` for each ``from`` import (the
+    name may be a submodule)."""
+    name = _dotted(path)
+    package = name.split(".") if path.name == "__init__.py" else name.split(".")[:-1]
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            yield from (a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package[: len(package) - node.level + 1]
+                mod = ".".join(base + ([node.module] if node.module else []))
+            else:
+                mod = node.module
+            yield mod
+            yield from (f"{mod}.{a.name}" for a in node.names)
+
+
+def test_every_package_module_is_reached_from_a_product_root():
+    modules = {_dotted(p): p for p in (ROOT / PKG).rglob("*.py")}
+    roots = _product_roots()
+    reached = {_dotted(p) for p in roots if _dotted(p) in modules}
+    todo = list(roots)
+    while todo:
+        for name in _imported_names(todo.pop()):
+            if name in modules and name not in reached:
+                reached.add(name)
+                if modules[name].name != "__init__.py":
+                    todo.append(modules[name])
+    # a package is reached through any of its submodules
+    reached |= {
+        ".".join(m.split(".")[:i]) for m in reached for i in range(1, m.count(".") + 1)
+    }
+    unreached = sorted(set(modules) - reached)
+    assert not unreached, f"no product root imports: {unreached}"

@@ -11,7 +11,6 @@ import pytest
 
 from data_check_spark.operators.mixing import apply_mix, mix_plan
 from data_check_spark.sources.synth import synth_pages
-from data_check_spark.streaming.checks import run_to_memory, stream_pages
 
 N = 2000
 
@@ -24,7 +23,7 @@ def pages_dir(spark, tmp_path_factory):
     return d
 
 
-def test_streaming_mix_matches_batch(spark, pages_dir):
+def test_streaming_mix_matches_batch(spark, stream_pages, run_to_memory, pages_dir):
     batch = spark.read.parquet(pages_dir)
     avail = {
         r["lang"]: r["n"]
@@ -42,7 +41,7 @@ def test_streaming_mix_matches_batch(spark, pages_dir):
         return sorted((r["url"], r["epoch"]) for r in df.collect())
 
     mixed_stream = apply_mix(
-        stream_pages(spark, pages_dir), "url", "lang", plan
+        stream_pages(pages_dir), "url", "lang", plan
     ).select("url", "epoch")
     q = run_to_memory(mixed_stream, "mixed_stream", "append")
     q.awaitTermination(120)

@@ -2,8 +2,7 @@
 including the whole Gopher pack) are stateless per-row projections, so
 route_rows runs UNCHANGED on a readStream frame and must agree with
 the batch router row-for-row. Key rules (unique/fd) need state and are
-deliberately batch-only — the stateful-dedup streaming check covers
-that direction (streaming/checks.py)."""
+deliberately batch-only."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -15,7 +14,6 @@ from data_check_spark.operators.quarantine import (
     route_rows,
 )
 from data_check_spark.sources.synth import synth_pages
-from data_check_spark.streaming.checks import run_to_memory, stream_pages
 
 N = 2000
 
@@ -39,8 +37,8 @@ def _flat(df):
     )
 
 
-def test_streaming_route_matches_batch(spark, pages_dir):
-    stream = stream_pages(spark, pages_dir)
+def test_streaming_route_matches_batch(spark, stream_pages, run_to_memory, pages_dir):
+    stream = stream_pages(pages_dir)
     rules = _rules()
     routed = route_rows(stream, rules).select(
         "url",
@@ -63,14 +61,14 @@ def test_streaming_route_matches_batch(spark, pages_dir):
     assert any("not_null:" in r for _, _, r in got)
 
 
-def test_streaming_route_rejects_stateful_rules(spark, pages_dir):
+def test_streaming_route_rejects_stateful_rules(spark, stream_pages, run_to_memory, pages_dir):
     """unique/fd rules aggregate over the whole key history — on an
     unbounded stream that is a stateful op route_rows doesn't model;
     Spark itself refuses the plan (distinct aggregation on a stream),
     which is the correct loud failure rather than silently-wrong
     per-microbatch uniqueness. (It fires already at rule-build time:
     the broadcast-or-not row probe is itself a batch action.)"""
-    stream = stream_pages(spark, pages_dir)
+    stream = stream_pages(pages_dir)
     from pyspark.errors.exceptions.captured import AnalysisException
 
     with pytest.raises(AnalysisException):
@@ -78,7 +76,7 @@ def test_streaming_route_rejects_stateful_rules(spark, pages_dir):
         run_to_memory(routed, "routed_should_fail", "append")
 
 
-def test_streaming_route_encoding_pack_matches_batch(spark, tmp_path):
+def test_streaming_route_encoding_pack_matches_batch(spark, stream_pages, run_to_memory, tmp_path):
     """encoding_rules is row-local, so the streaming router must agree
     with batch row-for-row — including on PLANTED decode scars, not
     just fail-closed NULLs."""
@@ -115,7 +113,7 @@ def test_streaming_route_encoding_pack_matches_batch(spark, tmp_path):
         StructField("text", StringType()),
     ])
     rules = encoding_rules()
-    stream = stream_pages(spark, d, schema=schema)
+    stream = stream_pages(d, schema=schema)
     routed = route_rows(stream, rules).select(
         "url", F.array_join("quarantine_reasons", ",").alias("reasons")
     )
