@@ -26,7 +26,12 @@ same lineage truncation with HDFS durability).
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
+
+from data_check_spark.session import local_frame
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -96,6 +101,69 @@ def _driver_components(edges: list) -> list:
     return [(x, find(x)) for x in parent]
 
 
+# Driver memory the small-graph fast path may spend on one collected
+# edge list and its union-find. Measured per edge: ≈560 B of Row,
+# tuple, dict-slot and label overhead plus the two ids' Python objects
+# (an int is 32 B). A string id is assumed to be a 100-character url,
+# a 149 B Python str, so a string edge costs ≈860 B: the budget holds
+# ≈430k long-id edges or ≈310k string-id edges.
+DRIVER_BUDGET_BYTES = 256 << 20
+_EDGE_OVERHEAD_BYTES = 560
+_FIXED_ID_BYTES = 32
+_STRING_ID_BYTES = 49 + 100
+_FIXED_WIDTH = (T.IntegralType, T.FloatType, T.DoubleType, T.BooleanType,
+                T.DateType, T.TimestampType, T.TimestampNTZType)
+
+
+def driver_edge_cap(id_type: T.DataType, driver_max_edges: int = 1_000_000) -> int:
+    """Most edges of ``id_type`` ids the driver fast path collects:
+    the byte budget over the bytes per edge, never above
+    ``driver_max_edges``."""
+    id_bytes = _FIXED_ID_BYTES if isinstance(id_type, _FIXED_WIDTH) else _STRING_ID_BYTES
+    return min(driver_max_edges, DRIVER_BUDGET_BYTES // (_EDGE_OVERHEAD_BYTES + 2 * id_bytes))
+
+
+def component_edges(pairs: DataFrame, src: str = "id_a", dst: str = "id_b") -> DataFrame:
+    """The cleaned edge set connected_components works on: no
+    self-pairs, no NULL ids, one DISTINCT (greatest, least) row per
+    undirected edge, as (u, v)."""
+    return (
+        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .distinct()
+    )
+
+
+def driver_labels(e: DataFrame, driver_max_edges: int = 1_000_000) -> list | None:
+    """Small-graph fast path: (id, min-id component) tuples of the
+    cleaned edge set ``e`` from ONE bounded collect and a driver
+    union-find, or None when ``e`` has more edges than
+    driver_edge_cap allows.
+
+    One union-find replaces O(log n) star iterations, each of which
+    costs 2 groupBys + 2 joins + 2 distincts + a checkpoint + a
+    collect in pure stage latency. The collect stops one row past the
+    cap, so the driver never holds more than the byte budget; a
+    100 TB pair list blows the cap and its caller takes the
+    distributed loop, so this is size-adaptive, not a local-mode
+    constant (the maybe_broadcast / sample_mod / fan_in convention)."""
+    cap = driver_edge_cap(e.schema["u"].dataType, driver_max_edges)
+    rows = e.limit(cap + 1).collect()
+    if len(rows) > cap:
+        return None
+    return _driver_components([(r[0], r[1]) for r in rows])
+
+
+def label_schema(id_type: T.DataType) -> T.StructType:
+    """connected_components' output schema for ``id_type`` ids."""
+    return T.StructType([
+        T.StructField("id", id_type, False),
+        T.StructField("component", id_type, False),
+    ])
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -112,6 +180,10 @@ def connected_components(
     min/least/greatest), so long doc ids and string urls both work;
     src and dst must share one type.
 
+    Edge sets within driver_edge_cap take the driver fast path
+    (driver_labels) and come back as a local relation; larger ones
+    run the star loop below, whose labels are identical.
+
     Convergence is detected by an order-independent edge-set
     signature (count + bit-XOR of per-edge xxhash64 — XOR cannot
     overflow under ANSI mode and the edge set is distinct so nothing
@@ -121,14 +193,19 @@ def connected_components(
     O(log n) with slack; hitting it raises rather than returning a
     partially-contracted (wrong) labelling.
     """
-    e = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = component_edges(pairs, src, dst)
+    labels = driver_labels(e, driver_max_edges)
+    if labels is None:
+        return star_components(e, max_iter)
+    return local_frame(pairs.sparkSession, labels, label_schema(e.schema["u"].dataType))
+
+
+def star_components(e: DataFrame, max_iter: int = 25) -> DataFrame:
+    """connected_components' distributed loop over a cleaned edge set
+    (component_edges): alternate large-star and small-star phases,
+    each localCheckpoint-ed, until the edge-set signature stops
+    changing."""
+    e = e.localCheckpoint()
 
     def sig(df: DataFrame) -> tuple:
         r = df.agg(
@@ -138,31 +215,6 @@ def connected_components(
         return (r["n"], r["s"])
 
     prev = sig(e)
-    if prev[0] == 0:
-        return e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    if prev[0] <= driver_max_edges:
-        # Small-graph fast path: the cleaned DISTINCT edge set (whose
-        # exact count the convergence signature just computed) fits
-        # the driver — ≤ ~16 MB of id pairs at the default cap — so
-        # one union-find replaces O(log n) star iterations, each of
-        # which costs 2 groupBys + 2 joins + 2 distincts + a
-        # checkpoint + a collect in pure stage latency. Same (id,
-        # min-id component) output bit-for-bit; a 100 TB pair list
-        # blows the cap and takes the distributed loop below, so this
-        # is size-adaptive, not a local-mode constant (the
-        # maybe_broadcast / sample_mod / fan_in convention).
-        spark = pairs.sparkSession
-        from pyspark.sql.types import StructField, StructType
-
-        id_type = e.schema["u"].dataType
-        schema = StructType(
-            [
-                StructField("id", id_type, False),
-                StructField("component", id_type, False),
-            ]
-        )
-        labels = _driver_components([(r["u"], r["v"]) for r in e.collect()])
-        return spark.createDataFrame(labels, schema)
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint()
         cur = sig(e)
@@ -227,15 +279,38 @@ def duplicate_clusters(
     exemplar (the member kept by a dedup retention pass) is the
     minimum id, i.e. the component label itself; at web scale "keep
     the first-crawled copy" maps onto exactly this with ids assigned
-    in crawl order. cluster_size rides a broadcast-sized per-component
-    aggregate (#components <= #pairs, and each row is 16 bytes)."""
-    cc = connected_components(pairs, src=src, dst=dst, max_iter=max_iter)
+    in crawl order."""
+    return cluster_view(connected_components(pairs, src=src, dst=dst, max_iter=max_iter))
+
+
+def cluster_view(cc: DataFrame) -> DataFrame:
+    """duplicate_clusters over an (id, component) labelling.
+    cluster_size rides a broadcast-sized per-component aggregate
+    (#components <= #pairs, and each row is 16 bytes)."""
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return cc.join(sizes, "component").select(
         "id",
         "component",
         (F.col("id") == F.col("component")).alias("is_exemplar"),
         "cluster_size",
+    )
+
+
+def cluster_schema(id_type: T.DataType) -> T.StructType:
+    """duplicate_clusters' output schema for ``id_type`` ids."""
+    return T.StructType(label_schema(id_type).fields + [
+        T.StructField("is_exemplar", T.BooleanType(), False),
+        T.StructField("cluster_size", T.LongType(), False),
+    ])
+
+
+def non_exemplar_rows(labels: list) -> list:
+    """duplicate_clusters' non-exemplar rows (id, component, False,
+    cluster_size) of driver_labels output, in (component, id) order."""
+    sizes = Counter(c for _, c in labels)
+    return sorted(
+        ((x, c, False, sizes[c]) for x, c in labels if x != c),
+        key=lambda r: (r[1], r[0]),
     )
 
 

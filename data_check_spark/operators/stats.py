@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_check_spark.functions.canonical import canonical_string
+from data_check_spark.session import local_frame
 
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -43,6 +44,12 @@ VERDICT_SCHEMA = (
     "partition string, column string, check string, "
     "metric double, threshold double, passed boolean"
 )
+
+
+def verdict_frame(spark, rows: list[tuple]) -> DataFrame:
+    """Verdict rows as a local relation: collecting it runs no job."""
+    return local_frame(spark, rows, VERDICT_SCHEMA)
+
 
 ALL_METRICS = frozenset({"n_distinct", "min_max", "mean_stddev"})
 # avg_tokens is opt-in even in ALL mode: it tokenizes the whole string
@@ -319,9 +326,9 @@ def partition_stats_verdicts(
     """
     threshold_rules(thresholds)
     rows = partition_stats_pass(df, partition_col, thresholds, approx).collect()
-    return df.sparkSession.createDataFrame(
+    return verdict_frame(
+        df.sparkSession,
         stats_verdict_rows([r.asDict(recursive=True) for r in rows], thresholds),
-        VERDICT_SCHEMA,
     )
 
 

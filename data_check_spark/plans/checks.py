@@ -31,6 +31,7 @@ from __future__ import annotations
 import math
 import operator
 from dataclasses import dataclass, field
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Callable
 
 import pandas as pd
@@ -40,7 +41,14 @@ from pyspark.sql import functions as F
 
 from data_check_spark.functions.textstats import repetition_metrics
 from data_check_spark.operators.bloom import KeyBloom, bloom_member_probe, build_key_bloom
-from data_check_spark.operators.components import duplicate_clusters
+from data_check_spark.operators.components import (
+    cluster_schema,
+    cluster_view,
+    component_edges,
+    driver_labels,
+    non_exemplar_rows,
+    star_components,
+)
 from data_check_spark.operators.dedup import minhash_lsh_pairs
 from data_check_spark.operators.drift import (
     EPS,
@@ -68,6 +76,7 @@ from data_check_spark.operators.stats import (
     stats_verdict_rows,
     threshold_rules,
 )
+from data_check_spark.session import local_frame
 
 
 def _gate(part, column: str, check: str, metric, bound, op=operator.le) -> tuple:
@@ -82,6 +91,15 @@ def _rounded_frac(sums: DataFrame):
     Spark (HALF_UP, like the DuckDB oracle; Python's round is
     half-to-even). NULL for an empty denominator."""
     return sums.select(F.round(F.try_divide(F.col("_d"), F.col("_t")), 6)).first()[0]
+
+
+def _half_up_frac(d: int, t: int) -> float | None:
+    """_rounded_frac's Python twin, for counts already on the driver:
+    Spark rounds the shortest decimal repr of the double d / t HALF_UP
+    to 6 places, and so does this. None for an empty denominator."""
+    if not t:
+        return None
+    return float(Decimal(repr(d / t)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 @dataclass
@@ -220,7 +238,8 @@ class Run:
     def fingerprint_frame(self) -> DataFrame | None:
         if self.fingerprint is None:
             return None
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(r["partition"], r["_fpn"], r["_fp_lo"], r["_fp_hi"]) for r in self.pass_rows],
             "partition string, n_rows bigint, fp_lo decimal(38,0), fp_hi decimal(38,0)",
         )
@@ -230,7 +249,8 @@ class Run:
         version drifts against it without rescanning this one."""
         if not (self.cats or self.hists):
             return None
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(kd, ky, float(fq)) for (kd, ky), fq in sorted(
                 self.prof1.items(), key=lambda t: (t[0][0], t[0][1] or "")
             )],
@@ -955,13 +975,18 @@ class NearDupCheck(Check):
     it over the UNFILTERED table like the drift checks — a resumed
     run reports the same verdict as an uninterrupted one.
 
-    The cluster contraction loop runs inside this check's Phase-1
-    action (its convergence test is an action); the converged star
-    edges are localCheckpoint-ed, so the verdict metric and the
-    violations dump both reread tiny cluster frames, never the corpus.
-    ``dump_violations`` emits key ``neardup:{text_col}``: the
-    non-exemplar members (id, component, cluster_size), sorted, capped
-    at violation_limit.
+    One Phase-1 action builds the verified pair list, collects its
+    cleaned edges under the driver byte budget
+    (operators/components.driver_labels) and labels the clusters
+    with a union-find in Python. The metric, (nodes - components) /
+    count(id_col), is rounded HALF_UP in Python like the DuckDB
+    oracle; the count is a concurrent action off that chain. Above
+    the byte budget the distributed star loop labels the clusters
+    instead, and the same formula reads its node and component
+    counts. ``dump_violations`` emits key ``neardup:{text_col}``: the
+    non-exemplar members (id, component, is_exemplar, cluster_size),
+    sorted by (component, id), capped at violation_limit — a local
+    relation on the fast path.
 
     Node ids (``id_col``) need only a total order — long doc ids and
     string urls both work; the exemplar is the component's MINIMUM id
@@ -993,7 +1018,7 @@ class NearDupCheck(Check):
 
     def plan(self, run):
         def clusters():
-            pairs = minhash_lsh_pairs(
+            e = component_edges(minhash_lsh_pairs(
                 run.df,
                 text_col=self.text_col,
                 id_col=self.id_col,
@@ -1003,23 +1028,33 @@ class NearDupCheck(Check):
                 jaccard_threshold=self.jaccard_threshold,
                 max_bucket=self.max_bucket,
                 pair_mode=self.pair_mode,
-            )
-            nd = duplicate_clusters(pairs)
-            dropped = nd.filter(~F.col("is_exemplar")).agg(F.count(F.lit(1)).alias("_d"))
-            total = run.df.agg(F.count(F.col(self.id_col)).alias("_t"))
-            return nd, _rounded_frac(dropped.crossJoin(total))
+            ))
+            labels = driver_labels(e)
+            if labels is None:
+                cc = star_components(e)
+                nodes, comps = cc.agg(
+                    F.count(F.lit(1)), F.count_if(F.col("id") == F.col("component"))
+                ).first()
+                viol = (cluster_view(cc).filter(~F.col("is_exemplar"))
+                        .orderBy("component", "id").limit(self.violation_limit))
+                return nodes, comps, viol
+            rows = non_exemplar_rows(labels)[: self.violation_limit]
+            viol = local_frame(run.spark, rows, cluster_schema(e.schema["u"].dataType))
+            return len(labels), len({c for _, c in labels}), viol
 
-        return {"nd": clusters}
+        total = run.df.agg(F.count(F.col(self.id_col)))
+        return {"nd": clusters, "total": lambda: total.first()[0]}
 
     def verdict_rows(self, run, got):
+        nodes, comps, _ = got["nd"]
         # a NULL metric (empty table) fails closed
-        return [_gate("*", self.text_col, "neardup_frac", got["nd"][1], self.max_neardup_frac)]
+        frac = _half_up_frac(nodes - comps, got["total"])
+        return [_gate("*", self.text_col, "neardup_frac", frac, self.max_neardup_frac)]
 
     def violations(self, run, got):
         if not self.dump_violations:
             return {}
-        return {f"neardup:{self.text_col}": got["nd"][0].filter(~F.col("is_exemplar"))
-                .orderBy("component", "id").limit(self.violation_limit)}
+        return {f"neardup:{self.text_col}": got["nd"][2]}
 
 
 @dataclass

@@ -54,10 +54,10 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_check_spark.operators.stats import (
-    VERDICT_SCHEMA,
     _metric_struct,
     _needed_metrics,
     stats_verdict_rows,
+    verdict_frame,
 )
 
 
@@ -165,4 +165,4 @@ class ObservedSuite:
                 ratio, float(chk.max_violation_ratio),
                 ratio is not None and ratio <= chk.max_violation_ratio,
             ))
-        return spark.createDataFrame(rows, VERDICT_SCHEMA)
+        return verdict_frame(spark, rows)

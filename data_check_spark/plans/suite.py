@@ -48,7 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_check_spark.operators.drift import drift_profile
-from data_check_spark.operators.stats import VERDICT_SCHEMA
+from data_check_spark.operators.stats import verdict_frame
 from data_check_spark.plans.audit import latest_run, write_audit
 from data_check_spark.plans.checks import (  # noqa: F401  (the suite's public check kinds)
     CategoricalDriftCheck,
@@ -72,6 +72,7 @@ from data_check_spark.plans.checks import (  # noqa: F401  (the suite's public c
     UniquenessCheck,
 )
 from data_check_spark.plans.manifest import Manifest
+from data_check_spark.session import local_frame
 
 
 def _spark_order(row: tuple) -> tuple:
@@ -239,7 +240,7 @@ class CheckSuite:
         rows.sort(key=_spark_order)
         result = SuiteResult(
             run_id or uuid.uuid4().hex[:12],
-            spark.createDataFrame(rows, VERDICT_SCHEMA),
+            verdict_frame(spark, rows),
             violations,
             run.cached,
             fingerprints=run.fingerprint_frame(),
@@ -297,7 +298,7 @@ class CheckSuite:
         if scoped and whole:
             wres, wrows, _ = CheckSuite(whole)._run(spark, df, partition_col, *refs)
             rows = rows + wrows
-            result.verdicts = spark.createDataFrame(rows, VERDICT_SCHEMA)
+            result.verdicts = verdict_frame(spark, rows)
             result.violations.update(wres.violations)
             result.cached.extend(wres.cached)
             result.drift_profile = wres.drift_profile
@@ -328,7 +329,8 @@ class CheckSuite:
             # validated run via SchemaCheck(expected=
             # schema_from_audit(...), exact=True) — free (df.schema)
             write_audit(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
                     "column string, dtype string",
                 ),

@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(
@@ -50,6 +51,26 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """Driver-side ``rows`` (tuples) as an Arrow-backed local relation.
+
+    ``createDataFrame`` over a Python list plans a ``LogicalRDD`` over
+    a pickled Python RDD: its first action runs a Spark job and forks
+    the Python workers. A ``pyarrow.Table`` plans a ``LocalRelation``
+    instead, which collects and joins without any job. For small
+    frames the driver already holds (verdict rows, cluster labels).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def run_with_timeout(spark: SparkSession, action, timeout_sec: float = 900.0):

@@ -59,3 +59,33 @@ def test_fast_path_output_type_matches_input(spark):
     out = connected_components(pairs)
     kinds = {f.name: f.dataType.simpleString() for f in out.schema.fields}
     assert kinds == {"id": "string", "component": "string"}
+
+
+def test_byte_cap_routes_string_ids_to_distributed_loop(spark, monkeypatch):
+    """The fast-path cap is a byte budget over bytes per edge: under
+    one budget a 40-edge long-id graph stays on the driver while the
+    same graph with string ids, at the assumed url width, takes the
+    distributed loop and gives the same labels."""
+    from data_check_spark.operators import components
+
+    rng = random.Random(3)
+    edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(60)]
+    as_str = [("url-%03d" % a, "url-%03d" % b) for a, b in edges]
+    want_long = sorted(_driver_components(edges))
+    want_str = sorted(_driver_components(as_str))
+    n = len({(max(a, b), min(a, b)) for a, b in edges if a != b})
+    # a budget that holds n long-id edges but not n string-id edges
+    per_long = components._EDGE_OVERHEAD_BYTES + 2 * components._FIXED_ID_BYTES
+    monkeypatch.setattr(components, "DRIVER_BUDGET_BYTES", per_long * n)
+    assert components.driver_edge_cap(components.T.LongType()) == n
+    assert components.driver_edge_cap(components.T.StringType()) < n
+
+    calls = []
+    union_find = components._driver_components
+    monkeypatch.setattr(
+        components, "_driver_components", lambda e: calls.append(len(e)) or union_find(e)
+    )
+    longs = connected_components(spark.createDataFrame(edges, "id_a long, id_b long"))
+    assert _labels(longs) == want_long and calls == [n]
+    strs = connected_components(spark.createDataFrame(as_str, "id_a string, id_b string"))
+    assert _labels(strs) == want_str and calls == [n]

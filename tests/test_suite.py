@@ -1194,3 +1194,38 @@ def test_unknown_check_type_rejected_before_any_job(spark, pages):
     with pytest.raises(TypeError, match="unknown check type"):
         s.run(spark, pages, "warc_day")
     assert {j for j in _job_ids(spark) if j > max(before, default=-1)} == set()
+
+
+def _assert_local_relation(spark, verdicts):
+    """A verdict frame is a LocalRelation whose collect runs no job."""
+    assert verdicts._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assert verdicts.collect()
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_verdict_relation_is_local(spark, tmp_path):
+    """run, run_resumable and ObservedSuite hand their verdict rows back
+    as a local relation: collecting them forks no Python worker and
+    runs no Spark job (a Python-list createDataFrame plans a LogicalRDD
+    whose first collect runs one)."""
+    from data_check_spark.plans.observed import ObservedSuite
+
+    from data_check_spark.plans.suite import LineDupCheck
+
+    df = spark.createDataFrame(
+        [("d1", "u1", "a\nb"), ("d1", "u2", "a"), ("d2", "u3", "c"), (None, "u4", "b")],
+        "part string, url string, text string",
+    )
+    suite = CheckSuite([StatsCheck(thresholds={"url": {"max_null_rate": 0.0}})])
+    _assert_local_relation(spark, suite.run(spark, df, "part").verdicts)
+    # a partition-scoped plus a global check: run_resumable merges the
+    # two runs' rows into one relation
+    mixed = CheckSuite(suite.checks + [LineDupCheck(id_col="url")])
+    resumed = mixed.run_resumable(spark, df, "part", Manifest(str(tmp_path / "m_local")))
+    _assert_local_relation(spark, resumed.verdicts)
+    osuite = ObservedSuite(suite)
+    observed, obs = osuite.attach(df)
+    observed.write.format("noop").mode("overwrite").save()
+    _assert_local_relation(spark, osuite.verdicts(spark, obs))
