@@ -9,9 +9,9 @@ DataFrame expressions so Catalyst/AQE pick the physical plan.
 
 Designed for 100 TB-scale tables of Common-Crawl-style web pages
 (url, warc_ts, html, text, lang): explicit key-hash repartitioning,
-salted two-phase aggregation for hot-key skew, broadcast joins for
-dimension snapshots, binary columns projected away before shuffles,
-and a checkpoint manifest for resumable runs.
+key checks that shuffle 8-byte key hashes instead of keys, broadcast
+joins for dimension snapshots, binary columns projected away before
+shuffles, and a checkpoint manifest for resumable runs.
 """
 
 __version__ = "0.1.0"

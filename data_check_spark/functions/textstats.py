@@ -41,10 +41,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     ).otherwise(F.regexp_count(text, F.lit(pat)).cast("int"))
 
 
-def n_chars(text: Column) -> Column:
-    return F.length(text)
-
-
 def _nonspace_chars(text: Column) -> Column:
     # length - whitespace count: one regex pass, no rebuilt string
     return F.length(text) - F.regexp_count(text, F.lit(r"\s"))

@@ -71,6 +71,9 @@ Scale design:
   any number of ``referential_violations_bloom(..., bloom=...)``
   calls / suite runs, the production amortization (a snapshot
   changes far less often than the fact table is validated).
+* ``bloom_missing_keys`` is the certified-violation census, optionally
+  per partition: ``ReferentialCheck(mode='bloom')`` persists it and
+  ``referential_violations_bloom`` sorts it.
 * NULL fact keys are certified violations on every path (xxhash64
   treats NULL as "skip input", which would alias NULL to the hash of
   the seed alone, so hashes are gated on ``isNotNull`` and the probe
@@ -89,7 +92,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from .refint import maybe_broadcast
+from .refint import absent_from, missing_keys
 
 # refuse to build a bitmap the driver/executors couldn't comfortably
 # hold or broadcast; callers with genuinely larger dimensions should
@@ -342,6 +345,24 @@ def bloom_member_probe(spark: SparkSession, bloom: KeyBloom):
     return member
 
 
+def bloom_missing_keys(
+    fact: DataFrame,
+    fact_key: str | Column,
+    member,
+    partition: Column | None = None,
+) -> DataFrame:
+    """Unsorted ``([partition,] ref_key, n)``: the fact keys a
+    ``bloom_member_probe`` certifies absent from its dimension, with
+    their row counts. The classification is a map-only filter, so only
+    certified violations reach the groupBy shuffle (mass ∝ violations,
+    not table size)."""
+    k = F.col(fact_key) if isinstance(fact_key, str) else fact_key
+    by = [] if partition is None else [partition.alias("partition")]
+    return fact.filter(~member(k)).groupBy(*by, k.alias("ref_key")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+
+
 def referential_violations_bloom(
     fact: DataFrame,
     fact_key: str | Column,
@@ -358,8 +379,8 @@ def referential_violations_bloom(
     """Fact rows whose key is absent from ``dim``, via a Bloom bitmap
     of the dimension keys. Output shape mirrors
     ``referential_violations``: a (ref_key, n_rows) census per
-    violating key by default, a bounded row dump with
-    ``keep_columns``.
+    violating key by default (``bloom_missing_keys``, sorted by key),
+    a bounded row dump with ``keep_columns``.
 
     ``exact=False``: certified violations only — one MAP-ONLY pass
     over the fact table (no shuffle of fact data besides the census
@@ -378,36 +399,25 @@ def referential_violations_bloom(
     run against it; when omitted, built here (count + build jobs on
     the dim side, the right default for one-shot use).
     """
-    spark = fact.sparkSession
     k = F.col(fact_key) if isinstance(fact_key, str) else fact_key
     if bloom is None:
         bloom = build_key_bloom(dim, dim_key, fpp, n_keys=n_keys)
-    member = bloom_member_probe(spark, bloom)
-
-    slim = fact.select(k.alias("ref_key"), *(keep_columns or []))
-    flagged = slim.withColumn("_maybe", member(F.col("ref_key")))
-    viol = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    if exact:
-        dim_keys = maybe_broadcast(
-            dim.select(F.col(dim_key).alias("_dim_key")).dropDuplicates(), broadcast
-        )
-        resid = (
-            flagged.filter(F.col("_maybe"))
-            .drop("_maybe")
-            .join(
-                dim_keys,
-                F.col("ref_key").eqNullSafe(F.col("_dim_key")),
-                "left_anti",
-            )
-        )
-        viol = viol.unionByName(resid)
-
+    member = bloom_member_probe(fact.sparkSession, bloom)
     if keep_columns:
-        out = viol.orderBy("ref_key")
-        return out.limit(limit) if limit else out
-    out = (
-        viol.groupBy("ref_key")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy("ref_key")
-    )
+        slim = fact.select(k.alias("ref_key"), *keep_columns)
+        out = slim.filter(~member(F.col("ref_key")))
+        if exact:
+            resid = slim.filter(member(F.col("ref_key")))
+            out = out.unionByName(
+                absent_from(resid, F.col("ref_key"), dim, dim_key, broadcast=broadcast)
+            )
+    else:
+        out = bloom_missing_keys(fact, k, member)
+        if exact:
+            # one key, one probe result: the residue's keys are
+            # disjoint from the certified ones (NULL keys probe False)
+            resid = missing_keys(fact.filter(member(k)), k, dim, dim_key, broadcast=broadcast)
+            out = out.unionByName(resid)
+        out = out.select("ref_key", F.col("n").alias("n_rows"))
+    out = out.orderBy("ref_key")
     return out.limit(limit) if limit else out

@@ -59,8 +59,8 @@ def psi_categorical(
     # null-rate is drift) — a plain equi-join would put each side's
     # NULL row on its own side of the full outer join and charge both
     # against the epsilon floor, manufacturing a huge false PSI on a
-    # column with any null mass (psi_from_profiles already joins
-    # null-safe; the DuckDB twin uses IS NOT DISTINCT FROM)
+    # column with any null mass (the DuckDB twin uses IS NOT
+    # DISTINCT FROM)
     j = f1.join(
         f2, on=f1["category"].eqNullSafe(f2["category"]), how="full_outer"
     ).select(
@@ -185,28 +185,6 @@ def drift_profile(
     return counts.join(F.broadcast(totals), "kind").withColumn(
         "freq", F.col("n").cast("double") / F.col("_total")
     ).drop("_total")
-
-
-def psi_from_profiles(p1: DataFrame, p2: DataFrame, round_to: int = 6) -> DataFrame:
-    """PSI per kind from two drift profiles → (kind, psi, n_buckets).
-    NULL keys are matched with null-safe equality so a null category
-    bucket pairs up across versions instead of double-counting."""
-    a = p1.select("kind", "key", F.col("freq").alias("p"))
-    b = p2.select("kind", "key", F.col("freq").alias("q"))
-    j = a.join(
-        b,
-        (a["kind"] == b["kind"]) & a["key"].eqNullSafe(b["key"]),
-        "full_outer",
-    ).select(
-        F.coalesce(a["kind"], b["kind"]).alias("kind"),
-        F.coalesce("p", F.lit(EPS)).alias("p"),
-        F.coalesce("q", F.lit(EPS)).alias("q"),
-    )
-    term = (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))
-    return j.groupBy("kind").agg(
-        F.round(F.sum(term), round_to).alias("psi"),
-        F.count(F.lit(1)).alias("n_buckets"),
-    )
 
 
 def _digest_arrays(digest: DataFrame):

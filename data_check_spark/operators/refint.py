@@ -15,6 +15,10 @@ Scale design:
 * only the join key (+ requested payload columns) of the fact side is
   projected before the join — a 100 TB pages table never shuffles its
   html/text bytes through this check.
+* the census aggregates the fact keys first and anti-joins that
+  aggregate (``missing_keys``). ``ReferentialCheck`` (plans/checks.py)
+  persists the same frame per partition; ``referential_violations``
+  sorts it.
 """
 
 from __future__ import annotations
@@ -96,6 +100,59 @@ def hashed_key(key: Column) -> Column:
     return F.when(key.isNotNull(), F.xxhash64(key))
 
 
+def absent_from(
+    frame: DataFrame,
+    key: Column,
+    dim: DataFrame,
+    dim_key: str,
+    hash_keys: bool = False,
+    broadcast: bool | str = "auto",
+) -> DataFrame:
+    """The rows of ``frame`` whose ``key`` is not among ``dim``'s keys
+    (left anti-join against the distinct dimension-key set, hinted per
+    ``maybe_broadcast``).
+
+    ``hash_keys=True`` joins on ``xxhash64`` surrogates: the build
+    side carries 8 bytes per dimension key instead of the key itself.
+    For url-keyed dimension snapshots (~80 B/url) that raises the
+    broadcastable-dim ceiling ~10× at a false-NEGATIVE rate bounded by
+    64-bit collisions (birthday bound: ~3·10⁻⁹ expected missed
+    violations at 10⁹ dim keys; never a false positive, and
+    deterministic: xxhash64 is fixed-seed). NULL keys stay in the
+    result on both paths (see ``hashed_key``); NULL dim keys match
+    nothing on both paths (raw: SQL equality is never true on NULL;
+    hashed: filtered before hashing)."""
+    if hash_keys:
+        dim_side = dim.filter(F.col(dim_key).isNotNull()).select(
+            F.xxhash64(dim_key).alias("_dk")
+        )
+        key = hashed_key(key)
+    else:
+        dim_side = dim.select(F.col(dim_key).alias("_dk"))
+    dim_keys = maybe_broadcast(dim_side.dropDuplicates(), broadcast)
+    return frame.join(dim_keys, key == F.col("_dk"), "left_anti")
+
+
+def missing_keys(
+    fact: DataFrame,
+    fact_key: str | Column,
+    dim: DataFrame,
+    dim_key: str,
+    partition: Column | None = None,
+    broadcast: bool | str = "auto",
+    hash_keys: bool = False,
+) -> DataFrame:
+    """Unsorted ``([partition,] ref_key, n)``: each fact key absent
+    from ``dim`` with its row count. The fact table is scanned once,
+    and the (partition, ref_key) groupBy runs BEFORE the anti-join: it
+    collapses via map-side combine to one row per distinct key, so the
+    anti-join probes that aggregate instead of every fact row."""
+    k = F.col(fact_key) if isinstance(fact_key, str) else fact_key
+    by = [] if partition is None else [partition.alias("partition")]
+    per_key = fact.groupBy(*by, k.alias("ref_key")).agg(F.count(F.lit(1)).alias("n"))
+    return absent_from(per_key, F.col("ref_key"), dim, dim_key, hash_keys, broadcast)
+
+
 def referential_violations(
     fact: DataFrame,
     fact_key: str | Column,
@@ -108,56 +165,17 @@ def referential_violations(
 ) -> DataFrame:
     """Rows of ``fact`` whose key has no match in ``dim`` (left anti).
 
-    Returns (ref_key, n_rows) aggregated per missing key by default —
-    the per-key census is what a verdict needs and shuffles far less
-    than row dumps; pass ``keep_columns`` for a row-level violation
-    dump instead (ref-style, bounded by ``limit``).
-
-    ``hash_keys=True`` anti-joins on ``xxhash64`` of the key instead
-    of the raw key: the broadcast/shuffle side carries 8 bytes per
-    dimension key instead of the key itself. For the north rule's
-    url-keyed dimension snapshots (~80 B/url) that raises the
-    broadcastable-dim ceiling ~10× — a 100M-url snapshot becomes an
-    ~800 MB raw build but an ~80 MB hash build — at the cost of a
-    false-NEGATIVE rate bounded by 64-bit collisions (birthday bound:
-    ~3·10⁻⁹ expected missed violations at 10⁹ dim keys; never a false
-    positive, and deterministic — xxhash64 is fixed-seed, so repeated
-    runs agree). NULL fact keys are violations on both paths (see
-    ``hashed_key``); NULL dim keys match nothing on both paths (raw:
-    SQL equality is never true on NULL; hashed: filtered before
-    hashing)."""
-    k = F.col(fact_key) if isinstance(fact_key, str) else fact_key
-    if hash_keys:
-        dim_side = dim.filter(F.col(dim_key).isNotNull()).select(
-            F.xxhash64(dim_key).alias("_dim_key")
-        )
-        # the 8-byte surrogate rides NEXT TO the raw key (the dump /
-        # census must still report real keys); the win is the dim
-        # build side, which is what the broadcast ceiling prices
-        extra = [hashed_key(k).alias("_jk")]
-        jcol = "_jk"
-    else:
-        dim_side = dim.select(F.col(dim_key).alias("_dim_key"))
-        extra = []
-        jcol = "ref_key"
-    dim_keys = maybe_broadcast(dim_side.dropDuplicates(), broadcast)
-
+    Returns (ref_key, n_rows) per missing key by default: the
+    ``missing_keys`` census, sorted by key, which is what a verdict
+    needs and shuffles far less than row dumps. Pass ``keep_columns``
+    for a row-level violation dump instead (ref-style, bounded by
+    ``limit``). ``hash_keys``: see ``absent_from``."""
     if keep_columns:
-        slim = fact.select(k.alias("ref_key"), *extra, *keep_columns)
-        out = (
-            slim.join(dim_keys, slim[jcol] == dim_keys["_dim_key"], "left_anti")
-            .drop("_jk")
-            .orderBy("ref_key")
-        )
-        return out.limit(limit) if limit else out
-
-    slim = fact.select(k.alias("ref_key"), *extra)
-    missing = slim.join(
-        dim_keys, slim[jcol] == dim_keys["_dim_key"], "left_anti"
-    )
-    out = (
-        missing.groupBy("ref_key")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy("ref_key")
-    )
+        k = F.col(fact_key) if isinstance(fact_key, str) else fact_key
+        slim = fact.select(k.alias("ref_key"), *keep_columns)
+        out = absent_from(slim, F.col("ref_key"), dim, dim_key, hash_keys, broadcast)
+    else:
+        out = missing_keys(fact, fact_key, dim, dim_key, broadcast=broadcast, hash_keys=hash_keys)
+        out = out.select("ref_key", F.col("n").alias("n_rows"))
+    out = out.orderBy("ref_key")
     return out.limit(limit) if limit else out

@@ -40,7 +40,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_check_spark.functions.textstats import repetition_metrics
-from data_check_spark.operators.bloom import KeyBloom, bloom_member_probe, build_key_bloom
+from data_check_spark.operators.bloom import (
+    KeyBloom,
+    bloom_member_probe,
+    bloom_missing_keys,
+    build_key_bloom,
+)
 from data_check_spark.operators.components import (
     cluster_schema,
     cluster_view,
@@ -62,7 +67,7 @@ from data_check_spark.operators.drift import (
 )
 from data_check_spark.operators.linededup import line_duplicate_stats
 from data_check_spark.operators.lm import bigram_lm_scores
-from data_check_spark.operators.refint import hashed_key, maybe_broadcast
+from data_check_spark.operators.refint import missing_keys
 from data_check_spark.operators.rowdiff import (
     column_match_ratios,
     exclusive_rows,
@@ -76,6 +81,7 @@ from data_check_spark.operators.stats import (
     stats_verdict_rows,
     threshold_rules,
 )
+from data_check_spark.operators.unique import duplicate_keys, fd_violating_keys
 from data_check_spark.session import local_frame
 
 
@@ -370,15 +376,14 @@ class StatsCheck(Check):
 
 @dataclass
 class UniquenessCheck(Check):
+    """Per-partition duplicate-key gate: verdict metric = the number of
+    keys occurring more than once in the partition (check ``unique``);
+    violations dump ``unique:{key}`` = (partition, key_value, n),
+    sorted, capped. Plan: operators/unique.duplicate_keys, whose
+    docstring says when to set ``broadcast_candidates=False``."""
     key: str
     max_duplicate_keys: int = 0
     violation_limit: int = 500  # ref bigquery.py:105
-    # the duplicate-hash candidate set is bounded only by the table's
-    # duplicate RATE — on a high-duplicate table (exactly what this
-    # check hunts) broadcasting it can exceed the 8GB broadcast /
-    # driver-memory limit and fail the job. Set False there: the probe
-    # falls back to a shuffled join (slower on the common low-duplicate
-    # case, measured; safe on the pathological one).
     broadcast_candidates: bool = True
 
     duplicates = _KEYS_MSG.replace("{kind}", "uniqueness")
@@ -390,33 +395,7 @@ class UniquenessCheck(Check):
         run.needs_parts = True
 
     def plan(self, run):
-        # Hash-candidate two-phase duplicate census. Phase 1 shuffles
-        # (partition, xxhash64(key)) — 8-byte hashes, not full key
-        # strings: measured 2.3x faster than the string-keyed groupBy
-        # at local[32] on 20M urls. No distinct() on the candidates: a
-        # left-semi probe is indifferent to duplicate build keys and
-        # the dedup added an exchange+stage. Phase 2 re-scans only the
-        # key column, keeps rows whose hash is a duplicate candidate,
-        # and recounts BY THE ACTUAL KEY — hash collisions can never
-        # fabricate a duplicate; phase 1 only prunes. The explicit
-        # broadcast matters: AQE kept a SortMergeJoin (sorting all fact
-        # rows) even with a ~3MB build side.
-        k = F.col(self.key)
-        h = F.xxhash64(k)
-        cand_h = (
-            run.df.groupBy(run.part.alias("partition"), h.alias("_h"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .select("_h")
-        )
-        build = F.broadcast(cand_h) if self.broadcast_candidates else cand_h
-        dups = (
-            run.df.select(run.part.alias("partition"), k.alias("key_value"), h.alias("_h"))
-            .join(build, "_h", "left_semi")
-            .groupBy("partition", "key_value")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-        )
+        dups = duplicate_keys(run.df, self.key, run.part, self.broadcast_candidates)
         return {"viol": lambda: run.census(dups, F.count(F.lit(1)))}
 
     def verdict_rows(self, run, got):
@@ -438,20 +417,9 @@ class FunctionalDependencyCheck(Check):
     Verdict metric = number of violating determinant values in the
     partition (check name ``fd``); violations dump (key
     ``fd:{determinant}``) = (partition, key_value, n_variants,
-    n_rows), sorted, capped. NULL-dependent combinations count as ONE
-    variant (byte-identical means "both NULL or both equal").
-
-    Plan = the same two-phase hash-candidate shape as UniquenessCheck:
-    phase 1 shuffles (partition, xxhash64(det), xxhash64(deps)) — two
-    8-byte hashes, never url/text bytes — and keeps determinant hashes
-    with >1 distinct dependent hash; phase 2 re-scans only rows whose
-    hash is a candidate (left-semi, broadcast by default — the set is
-    bounded by the violation rate; set ``broadcast_candidates=False``
-    on a high-violation table) and recounts BY VALUE, so a determinant
-    hash collision can never fabricate a violation. One-sided caveat:
-    two distinct dependent values colliding under xxhash64 *within one
-    determinant group* would mask that group in phase 1 (~2^-64 per
-    pair). Partition-scoped → resumes like stats/uniqueness."""
+    n_rows), sorted, capped. Plan and NULL semantics:
+    operators/unique.fd_violating_keys. Partition-scoped → resumes
+    like stats/uniqueness."""
     determinant: str
     dependents: tuple[str, ...] | list
     max_violating_keys: int = 0
@@ -471,35 +439,8 @@ class FunctionalDependencyCheck(Check):
         run.needs_parts = True
 
     def plan(self, run):
-        # the probe joins on the determinant hash alone — broadcasting
-        # (hash) instead of (partition, hash) keeps the build side
-        # minimal; a hash that violates only in partition A semi-keeps
-        # its partition-B rows too, and the by-value recount's
-        # n_variants>1 filter discards them
-        det = F.col(self.determinant)
-        deps = [F.col(c) for c in self.dependents]
-        h_det, h_dep = F.xxhash64(det), F.xxhash64(*deps)
-        cand = (
-            run.df.groupBy(run.part.alias("partition"), h_det.alias("_hd"))
-            .agg(F.count_distinct(h_dep).alias("_v"))
-            .filter(F.col("_v") > 1)
-            .select("_hd")
-        )
-        build = F.broadcast(cand) if self.broadcast_candidates else cand
-        viol = (
-            run.df.select(
-                run.part.alias("partition"),
-                det.alias("key_value"),
-                F.struct(*deps).alias("_dep"),
-                h_det.alias("_hd"),
-            )
-            .join(build, "_hd", "left_semi")
-            .groupBy("partition", "key_value")
-            .agg(
-                F.count_distinct("_dep").alias("n_variants"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-            .filter(F.col("n_variants") > 1)
+        viol = fd_violating_keys(
+            run.df, self.determinant, self.dependents, run.part, self.broadcast_candidates
         )
         return {"viol": lambda: run.census(viol, F.count(F.lit(1)))}
 
@@ -513,39 +454,27 @@ class FunctionalDependencyCheck(Check):
 
 @dataclass
 class ReferentialCheck(Check):
+    """Per-partition referential gate: verdict metric = the number of
+    fact rows whose key is absent from the dimension (check
+    ``refint``); violations dump ``refint:{name}`` = (partition,
+    ref_key, n), sorted. ``mode='join'`` runs
+    operators/refint.missing_keys (``broadcast`` and ``hash_keys`` are
+    its options; its census shuffle carries every distinct fact key);
+    ``mode='bloom'`` runs operators/bloom.bloom_missing_keys, the
+    fail-fast gate whose shuffle carries only certified violations: a
+    FAIL is certain, a PASS may miss an expected ``fpp`` fraction of
+    violating keys. ``bloom`` (a prebuilt KeyBloom) or ``bloom_path``
+    (a .npz from KeyBloom.save, declarable in JSON config) skips the
+    build jobs, once per dimension snapshot."""
     name: str
     fact_key: Callable[[], Column] | str
     dim: Callable[[SparkSession], DataFrame]
     dim_key: str
     max_violation_rows: int = 0
-    # True = always broadcast the dim-key set (explicit override),
-    # False = never, 'auto' (default) = only when Catalyst's size
-    # estimate is ≤ refint.AUTO_BROADCAST_CAP_BYTES, else leave the
-    # join unhinted for AQE's runtime decision (see
-    # operators/refint.maybe_broadcast)
     broadcast: bool | str = "auto"
-    # anti-join on xxhash64(key) surrogates: the dim build side
-    # carries 8 B/key instead of the raw key (~10× higher broadcast
-    # ceiling for url-keyed snapshots) at a 64-bit-collision-bounded
-    # false-negative rate; see operators/refint.referential_violations
     hash_keys: bool = False
-    # 'join' (default): exact anti-join of the per-key aggregate —
-    # that aggregate's shuffle carries every DISTINCT fact key, which
-    # for a url-keyed fact table is the whole key set. 'bloom': the
-    # fail-fast gate (operators/bloom.py) — dim keys become a
-    # broadcast Bloom bitmap, bloom-negative fact rows are CERTIFIED
-    # violations caught map-only, and only violating rows enter the
-    # census shuffle (mass ∝ violations, not table size). Verdict
-    # semantics under 'bloom': a FAIL is certain (precision 1.0, every
-    # flagged key truly absent); a PASS may miss an expected `fpp`
-    # fraction of violating keys — the gate direction a fail-fast
-    # check wants. hash_keys/broadcast are ignored in bloom mode.
     mode: str = "join"
     fpp: float = 1e-3
-    # bloom mode amortization: a prebuilt operators/bloom.KeyBloom
-    # (Python API) or a .npz path from KeyBloom.save (declarable in
-    # JSON config) — built once per dimension snapshot, every
-    # validation run against that snapshot then skips the build jobs
     bloom: object | None = None
     bloom_path: str | None = None
 
@@ -563,39 +492,19 @@ class ReferentialCheck(Check):
         run.needs_parts = True
 
     def _per_key(self, run: Run) -> DataFrame:
-        """(partition, ref_key, n) of the fact keys absent from the
-        dimension — the fact table is scanned exactly once."""
         fk = F.expr(self.fact_key) if isinstance(self.fact_key, str) else self.fact_key()
         dim = self.dim(run.spark)
-        fact = run.df
-        if self.mode == "bloom":
-            if self.bloom is not None:
-                bloom = self.bloom
-            elif self.bloom_path is not None:
-                bloom = KeyBloom.load(self.bloom_path)
-            else:
-                bloom = build_key_bloom(dim, self.dim_key, self.fpp)
-            # map-only classification; only certified violations
-            # reach the census shuffle
-            fact = fact.filter(~bloom_member_probe(run.spark, bloom)(fk))
-        per_key = fact.groupBy(run.part.alias("partition"), fk.alias("ref_key")).agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        if self.mode == "bloom":
-            return per_key
-        if self.hash_keys:
-            dim_side = dim.filter(F.col(self.dim_key).isNotNull()).select(
-                F.xxhash64(self.dim_key).alias("_dk")
+        if self.mode == "join":
+            return missing_keys(
+                run.df, fk, dim, self.dim_key, run.part, self.broadcast, self.hash_keys
             )
+        if self.bloom is not None:
+            bloom = self.bloom
+        elif self.bloom_path is not None:
+            bloom = KeyBloom.load(self.bloom_path)
         else:
-            dim_side = dim.select(F.col(self.dim_key).alias("_dk"))
-        dim_keys = maybe_broadcast(dim_side.dropDuplicates(), self.broadcast)
-        # aggregate BEFORE the anti-join: the (partition, ref_key)
-        # groupBy collapses via map-side combine to at most |dims| x
-        # |partitions| rows, so the anti-join probes a tiny aggregate
-        # instead of every fact row
-        probe = hashed_key(F.col("ref_key")) if self.hash_keys else F.col("ref_key")
-        return per_key.join(dim_keys, probe == F.col("_dk"), "left_anti")
+            bloom = build_key_bloom(dim, self.dim_key, self.fpp)
+        return bloom_missing_keys(run.df, fk, bloom_member_probe(run.spark, bloom), run.part)
 
     def plan(self, run):
         return {"viol": lambda: run.census(self._per_key(run), F.sum("n"))}

@@ -59,6 +59,7 @@ from data_check_spark.operators.stats import (
     stats_verdict_rows,
     verdict_frame,
 )
+from data_check_spark.plans.checks import _gate
 
 
 @dataclass
@@ -116,10 +117,7 @@ class ObservedSuite:
         if self._expr_checks:
             exprs.append(F.count(F.lit(1)).alias("_xn"))
             exprs.extend(
-                F.count_if(
-                    ~F.coalesce(F.expr(c.predicate_sql), F.lit(False))
-                ).alias(f"_x_{c.name}")
-                for c in self._expr_checks
+                F.count_if(c.violated()).alias(f"_x_{c.name}") for c in self._expr_checks
             )
         return exprs
 
@@ -160,9 +158,5 @@ class ObservedSuite:
         for chk in self._expr_checks:
             n = metrics["_xn"]
             ratio = metrics[f"_x_{chk.name}"] / n if n else None
-            rows.append((
-                "*", chk.name, "expr",
-                ratio, float(chk.max_violation_ratio),
-                ratio is not None and ratio <= chk.max_violation_ratio,
-            ))
+            rows.append(_gate("*", chk.name, "expr", ratio, chk.max_violation_ratio))
         return verdict_frame(spark, rows)

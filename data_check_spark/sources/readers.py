@@ -1,4 +1,4 @@
-"""Parquet/table readers for the driver-provided oracle tables.
+"""Table and SQL sources, with the reference's sampling gates.
 
 Reference parity: the reference's only source abstraction is a table
 name or a SQL string (``/root/reference/data_check/data_processor.py:13-45``,
@@ -9,36 +9,6 @@ name or a SQL string (``/root/reference/data_check/data_processor.py:13-45``,
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    """Load the driver tables and register them as temp views so both
-    the DataFrame API and ``spark.sql`` inputs work (reference S1/S2)."""
-    out: dict[str, DataFrame] = {}
-    for n in names:
-        df = load_table(spark, sf_dir, n)
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out
 
 
 def is_sql_input(table_or_sql: str) -> bool:

@@ -9,7 +9,10 @@ functions included, using ``ast`` only (nothing is imported). It does
 not follow the imports of a package ``__init__.py``: a re-export does
 not make a module part of a product path. A package counts as reached
 when any of its submodules is. A module that only its own tests import
-fails this test; delete it or wire it into a product path."""
+fails this test; delete it or wire it into a product path.
+
+The same holds one level down: every top-level public function or
+class of the package is used somewhere outside its own definition."""
 
 import ast
 from pathlib import Path
@@ -69,3 +72,49 @@ def test_every_package_module_is_reached_from_a_product_root():
     }
     unreached = sorted(set(modules) - reached)
     assert not unreached, f"no product root imports: {unreached}"
+
+
+def _used_names(tree):
+    """(identifier, line) of every name a file reads, every attribute
+    it accesses and every name it imports; f-string expressions
+    included."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.lineno
+        elif isinstance(node, ast.alias):
+            yield node.name.rsplit(".", 1)[-1], node.lineno
+
+
+def test_every_public_definition_is_used():
+    """A top-level public ``def``/``class`` of the package whose name
+    no product root, benchmark, script, test or other package code
+    uses is dead: delete it."""
+    files = [
+        *(ROOT / PKG).rglob("*.py"),
+        *(ROOT / "perfbench").rglob("*.py"),
+        *(ROOT / "scripts").rglob("*.py"),
+        *(ROOT / "tests").rglob("*.py"),
+        ROOT / "__spark_entry__.py",
+    ]
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in files}
+    uses: dict[str, list] = {}
+    for path, tree in trees.items():
+        for name, line in _used_names(tree):
+            uses.setdefault(name, []).append((path, line))
+    dead = []
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        for node in trees[path].body:
+            kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            if not isinstance(node, kinds) or node.name.startswith("_"):
+                continue
+            # a recursive call or a class's reference to itself is
+            # not a use
+            outside = [
+                (p, line) for p, line in uses.get(node.name, [])
+                if not (p == path and node.lineno <= line <= node.end_lineno)
+            ]
+            if not outside:
+                dead.append(f"{_dotted(path)}.{node.name}")
+    assert not dead, f"public definitions nothing uses: {dead}"

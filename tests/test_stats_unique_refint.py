@@ -67,10 +67,10 @@ def test_avg_tokens_gate_fails_closed_on_null_metric(spark):
 
 
 def test_uniqueness(df):
-    viol = uniqueness_violations(df, "k", salted=True).collect()
+    viol = uniqueness_violations(df, "k", broadcast_candidates=True).collect()
     assert [(r["key_value"], r["n"]) for r in viol] == [("b", 2)]
-    # salted and unsalted plans agree
-    viol2 = uniqueness_violations(df, "k", salted=False).collect()
+    # broadcast and shuffled candidate probes agree
+    viol2 = uniqueness_violations(df, "k", broadcast_candidates=False).collect()
     assert [(r["key_value"], r["n"]) for r in viol2] == [("b", 2)]
     passed, n, msg = uniqueness_check(df.filter("k <> 'b'"), "k")
     assert passed and n == 0 and msg is None
