@@ -72,8 +72,11 @@ Scale design:
   calls / suite runs, the production amortization (a snapshot
   changes far less often than the fact table is validated).
 * ``bloom_missing_keys`` is the certified-violation census, optionally
-  per partition: ``ReferentialCheck(mode='bloom')`` persists it and
-  ``referential_violations_bloom`` sorts it.
+  per partition: ``ReferentialCheck(mode='bloom')`` persists it.
+  ``referential_violations_bloom`` runs the same map-only filter and
+  groups the violating rows (plus, with ``exact=True``, the
+  anti-joined bloom-positive rows) once, so only violations reach the
+  shuffle.
 * NULL fact keys are certified violations on every path (xxhash64
   treats NULL as "skip input", which would alias NULL to the hash of
   the seed alone, so hashes are gated on ``isNotNull`` and the probe
@@ -92,7 +95,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from .refint import absent_from, missing_keys
+from .refint import absent_from
 
 # refuse to build a bitmap the driver/executors couldn't comfortably
 # hold or broadcast; callers with genuinely larger dimensions should
@@ -379,8 +382,9 @@ def referential_violations_bloom(
     """Fact rows whose key is absent from ``dim``, via a Bloom bitmap
     of the dimension keys. Output shape mirrors
     ``referential_violations``: a (ref_key, n_rows) census per
-    violating key by default (``bloom_missing_keys``, sorted by key),
-    a bounded row dump with ``keep_columns``.
+    violating key by default (for ``exact=False`` the
+    ``bloom_missing_keys`` plan, sorted by key), a bounded row dump
+    with ``keep_columns``.
 
     ``exact=False``: certified violations only — one MAP-ONLY pass
     over the fact table (no shuffle of fact data besides the census
@@ -403,21 +407,17 @@ def referential_violations_bloom(
     if bloom is None:
         bloom = build_key_bloom(dim, dim_key, fpp, n_keys=n_keys)
     member = bloom_member_probe(fact.sparkSession, bloom)
-    if keep_columns:
-        slim = fact.select(k.alias("ref_key"), *keep_columns)
-        out = slim.filter(~member(F.col("ref_key")))
-        if exact:
-            resid = slim.filter(member(F.col("ref_key")))
-            out = out.unionByName(
-                absent_from(resid, F.col("ref_key"), dim, dim_key, broadcast=broadcast)
-            )
-    else:
-        out = bloom_missing_keys(fact, k, member)
-        if exact:
-            # one key, one probe result: the residue's keys are
-            # disjoint from the certified ones (NULL keys probe False)
-            resid = missing_keys(fact.filter(member(k)), k, dim, dim_key, broadcast=broadcast)
-            out = out.unionByName(resid)
-        out = out.select("ref_key", F.col("n").alias("n_rows"))
-    out = out.orderBy("ref_key")
+    slim = fact.select(k.alias("ref_key"), *(keep_columns or []))
+    rows = slim.filter(~member(F.col("ref_key")))
+    if exact:
+        # one key, one probe result: the residue's keys are disjoint
+        # from the certified ones (NULL keys probe False), and only
+        # bloom-positive rows are anti-joined
+        resid = slim.filter(member(F.col("ref_key")))
+        rows = rows.unionByName(
+            absent_from(resid, F.col("ref_key"), dim, dim_key, broadcast=broadcast)
+        )
+    if not keep_columns:
+        rows = rows.groupBy("ref_key").agg(F.count(F.lit(1)).alias("n_rows"))
+    out = rows.orderBy("ref_key")
     return out.limit(limit) if limit else out

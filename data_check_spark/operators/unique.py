@@ -27,14 +27,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _by(partition: Column | None) -> tuple[list[Column], list[str]]:
-    """The optional leading ``partition`` column: its projection and
-    its name for the by-value regroup."""
-    if partition is None:
-        return [], []
-    return [partition.alias("partition")], ["partition"]
-
-
 def duplicate_keys(
     df: DataFrame,
     key: str | Column,
@@ -54,18 +46,19 @@ def duplicate_keys(
     duplicate RATE; on a high-duplicate table set
     ``broadcast_candidates=False`` so the probe falls back to a
     shuffled join instead of exceeding the broadcast limit."""
-    proj, names = _by(partition)
+    by = [] if partition is None else [partition.alias("partition")]
+    names = [] if partition is None else ["partition"]
     k = F.col(key) if isinstance(key, str) else key
     h = F.xxhash64(k)
     cand_h = (
-        df.groupBy(*proj, h.alias("_h"))
+        df.groupBy(*by, h.alias("_h"))
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
         .select("_h")
     )
     build = F.broadcast(cand_h) if broadcast_candidates else cand_h
     return (
-        df.select(*proj, k.alias("key_value"), h.alias("_h"))
+        df.select(*by, k.alias("key_value"), h.alias("_h"))
         .join(build, "_h", "left_semi")
         .groupBy(*names, "key_value")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -74,14 +67,11 @@ def duplicate_keys(
 
 
 def uniqueness_violations(
-    df: DataFrame,
-    key: str | Column,
-    limit: int | None = None,
-    broadcast_candidates: bool = True,
+    df: DataFrame, key: str | Column, limit: int | None = None
 ) -> DataFrame:
     """Keys occurring more than once, with their multiplicity:
     ``duplicate_keys`` sorted by key. Returns (key_value, n)."""
-    out = duplicate_keys(df, key, broadcast_candidates=broadcast_candidates).orderBy("key_value")
+    out = duplicate_keys(df, key).orderBy("key_value")
     return out.limit(limit) if limit else out
 
 
@@ -108,19 +98,20 @@ def fd_violating_keys(
     DISTINCT dependent values colliding under xxhash64 *within one
     determinant group* would mask that group in phase 1 (~2^-64 per
     pair, the standard hash-fingerprint trade)."""
-    proj, names = _by(partition)
+    by = [] if partition is None else [partition.alias("partition")]
+    names = [] if partition is None else ["partition"]
     det = F.col(determinant) if isinstance(determinant, str) else determinant
     deps = [F.col(c) for c in dependents]
     h_det, h_dep = F.xxhash64(det), F.xxhash64(*deps)
     cand = (
-        df.groupBy(*proj, h_det.alias("_hd"))
+        df.groupBy(*by, h_det.alias("_hd"))
         .agg(F.count_distinct(h_dep).alias("_v"))
         .filter(F.col("_v") > 1)
         .select("_hd")
     )
     build = F.broadcast(cand) if broadcast_candidates else cand
     return (
-        df.select(*proj, det.alias("key_value"), F.struct(*deps).alias("_dep"), h_det.alias("_hd"))
+        df.select(*by, det.alias("key_value"), F.struct(*deps).alias("_dep"), h_det.alias("_hd"))
         .join(build, "_hd", "left_semi")
         .groupBy(*names, "key_value")
         .agg(

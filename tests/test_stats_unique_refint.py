@@ -4,7 +4,11 @@ import pytest
 from data_check_spark.operators.refint import referential_violations
 from data_check_spark.operators.schema_diff import common_columns, schema_diff
 from data_check_spark.operators.stats import column_stats, partition_stats_verdicts
-from data_check_spark.operators.unique import uniqueness_check, uniqueness_violations
+from data_check_spark.operators.unique import (
+    duplicate_keys,
+    uniqueness_check,
+    uniqueness_violations,
+)
 
 
 @pytest.fixture(scope="module")
@@ -67,10 +71,10 @@ def test_avg_tokens_gate_fails_closed_on_null_metric(spark):
 
 
 def test_uniqueness(df):
-    viol = uniqueness_violations(df, "k", broadcast_candidates=True).collect()
+    viol = uniqueness_violations(df, "k").collect()
     assert [(r["key_value"], r["n"]) for r in viol] == [("b", 2)]
     # broadcast and shuffled candidate probes agree
-    viol2 = uniqueness_violations(df, "k", broadcast_candidates=False).collect()
+    viol2 = duplicate_keys(df, "k", broadcast_candidates=False).orderBy("key_value").collect()
     assert [(r["key_value"], r["n"]) for r in viol2] == [("b", 2)]
     passed, n, msg = uniqueness_check(df.filter("k <> 'b'"), "k")
     assert passed and n == 0 and msg is None
