@@ -320,7 +320,11 @@ def bloom_member_probe(spark: SparkSession, bloom: KeyBloom):
     absence. NULL keys probe False. Only the 16-byte (h1, h2) hash
     pair crosses Arrow; positions/words/bits are batch numpy. The
     bitmap rides an explicit SparkContext broadcast (one transfer per
-    executor)."""
+    executor), exposed as ``member.broadcast``: the caller owns it and
+    calls its ``destroy()`` after the last action over a plan that
+    probes (``ReferentialCheck`` leaves that to
+    ``SuiteResult.unpersist()``). Until then it holds up to
+    ``MAX_BITMAP_BYTES`` on the driver and every executor."""
     bc = spark.sparkContext.broadcast(bloom.bitmap)
     m_bits, k_hashes = bloom.m_bits, bloom.k_hashes
     kk = np.arange(k_hashes, dtype=np.int64)
@@ -345,6 +349,7 @@ def bloom_member_probe(spark: SparkSession, bloom: KeyBloom):
         h1, h2 = _hash_pair(key)
         return F.when(key.isNull(), F.lit(False)).otherwise(_probe(h1, h2))
 
+    member.broadcast = bc
     return member
 
 
@@ -402,6 +407,15 @@ def referential_violations_bloom(
     build once per dimension snapshot, reuse across every validation
     run against it; when omitted, built here (count + build jobs on
     the dim side, the right default for one-shot use).
+
+    The bitmap broadcast this makes (``bloom_member_probe``) is never
+    destroyed: the returned frame is lazy, so only the caller knows
+    when its last action ran, and it stays registered for the life of
+    the session. A long-lived session that checks repeatedly should
+    run ``ReferentialCheck(mode='bloom')``, whose
+    ``SuiteResult.unpersist()`` destroys it, or compose
+    ``bloom_member_probe`` + ``bloom_missing_keys`` and destroy
+    ``member.broadcast`` itself.
     """
     k = F.col(fact_key) if isinstance(fact_key, str) else fact_key
     if bloom is None:

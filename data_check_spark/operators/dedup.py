@@ -163,6 +163,12 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard) via MinHash + LSH.
 
+    Not lazy: building the frame runs Spark jobs. The banded
+    signatures, the candidate pairs and the candidates' shingles are
+    eager ``localCheckpoint``s (see the comments below), so a call pays
+    the shingle + minhash pipeline before it returns, even when the
+    caller only explains or composes the result.
+
     Plan shape: one map pass computes signatures; explode to (band,
     band_hash, id); groupBy bucket; pairs emitted only inside buckets
     (the LSH point: candidate generation without an all-pairs join);

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_check_spark.session import local_frame
+
 EPS = 1e-6  # PSI epsilon floor for empty buckets (standard practice)
 
 
@@ -282,7 +284,7 @@ def ks_from_tdigest(
     the right default when the value range is unknown at 100 TB."""
     a1, a2 = build_digest_arrays(df1, df2, col, delta)
     ks = ks_from_digest_arrays(a1, a2, round_to)
-    return df1.sparkSession.createDataFrame([(ks,)], "ks double")
+    return local_frame(df1.sparkSession, [(ks,)], "ks double")
 
 
 def psi_from_tdigest(
@@ -299,9 +301,7 @@ def psi_from_tdigest(
     when you need both."""
     a1, a2 = build_digest_arrays(df1, df2, col, delta)
     psi = psi_from_digest_arrays(a1, a2, n_buckets, round_to)
-    return df1.sparkSession.createDataFrame(
-        [(psi, n_buckets)], "psi double, n_buckets int"
-    )
+    return local_frame(df1.sparkSession, [(psi, n_buckets)], "psi double, n_buckets int")
 
 
 def ks_statistic(

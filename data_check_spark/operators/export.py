@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from data_check_spark.functions.splits import key_md5
 from data_check_spark.operators.fingerprint import lane_sum_aggs, row_hash
+from data_check_spark.session import local_frame
 
 
 def shard_id(key: Column, num_shards: int, salt: str = "dcs-shard") -> Column:
@@ -126,7 +127,7 @@ def export_shards(
             f"shard (see shard_id) — gate the key with NotNullCheck/"
             f"UniqueCheck upstream"
         )
-    manifest = spark.createDataFrame(rows, lazy.schema)
+    manifest = local_frame(spark, rows, lazy.schema)
     sharded = df.withColumn("shard", shard_id(F.col(key_col), num_shards, salt))
     sharded.repartition(num_shards, F.col("shard")).write.partitionBy("shard").mode(
         mode

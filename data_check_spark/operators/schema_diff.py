@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from data_check_spark.session import local_frame
+
 SCHEMA_DIFF_SCHEMA = (
     "column string, status string, type_1 string, type_2 string"
 )
@@ -79,4 +81,4 @@ def schema_diff(spark: SparkSession, df1: DataFrame, df2: DataFrame) -> DataFram
                 t2.simpleString() if t2 else None,
             )
         )
-    return spark.createDataFrame(rows, SCHEMA_DIFF_SCHEMA)
+    return local_frame(spark, rows, SCHEMA_DIFF_SCHEMA)

@@ -33,6 +33,8 @@ from pyspark.sql import Window
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from data_check_spark.session import local_frame
+
 
 def cosine_jvm(a: Column, b: Column) -> Column:
     """JVM-side cosine similarity of two array<float/double> columns
@@ -343,7 +345,8 @@ def centroids_to_df(spark, centroids: np.ndarray) -> DataFrame:
     batches (or another engine) reuse the identical cells without
     retraining, the same lifecycle as the LM count store and the
     bloom filter's persisted form."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
         "cell int, centroid array<double>",
     )

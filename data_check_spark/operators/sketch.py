@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_check_spark.session import local_frame
+
 SKETCH_SCHEMA = "center double, weight bigint"
 
 
@@ -88,8 +90,7 @@ def sketch_quantiles(
         i = int(np.searchsorted(cum, target, side="left"))
         i = min(i, len(centers) - 1)
         rows.append((float(q), round(float(centers[i]), round_to)))
-    spark = sketch.sparkSession
-    return spark.createDataFrame(rows, "q double, value double")
+    return local_frame(sketch.sparkSession, rows, "q double, value double")
 
 
 def quantiles_via_sketch(
@@ -268,7 +269,7 @@ def tdigest_quantiles(digest: DataFrame, qs: list[float], round_to: int = 6) -> 
     spark = digest.sparkSession
     cent = pdf[~pdf["is_edge"]].sort_values("mean")
     if len(cent) == 0:
-        return spark.createDataFrame([(float(q), None) for q in qs], "q double, value double")
+        return local_frame(spark, [(float(q), None) for q in qs], "q double, value double")
     m = cent["mean"].to_numpy(np.float64)
     w = cent["weight"].to_numpy(np.float64)
     vmin, vmax = float(pdf["vmin"].min()), float(pdf["vmax"].max())
@@ -286,7 +287,7 @@ def tdigest_quantiles(digest: DataFrame, qs: list[float], round_to: int = 6) -> 
         else:
             val = float(np.interp(t, cum, m))
         rows.append((float(q), round(float(val), round_to)))
-    return spark.createDataFrame(rows, "q double, value double")
+    return local_frame(spark, rows, "q double, value double")
 
 
 def quantiles_via_tdigest(

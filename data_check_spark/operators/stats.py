@@ -466,7 +466,8 @@ def iqr_outlier_counts(
          counts[f"{c}__below"], counts[f"{c}__above"])
         for c in cols
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "column string, n_rows bigint, q1 double, q3 double, "
         "lo_fence double, hi_fence double, n_below bigint, n_above bigint",

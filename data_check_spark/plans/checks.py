@@ -15,7 +15,9 @@ A check kind contributes, through the methods of :class:`Check`:
   value counts ride one drift-profile scan per table version;
 * ``plan(run)`` — the bounded Phase-1 actions it submits to the suite's
   thread pool (values that are not callables are lazy frames handed
-  through unchanged);
+  through unchanged). A callable builds the frame it collects, so
+  that plan's analysis runs on a pool thread too; only a frame that is
+  also handed to ``violations`` is built in ``plan``;
 * ``verdict_rows(run, got)`` — its verdict rows as plain Python tuples,
   computed from the shared passes' results (on ``run``) and its own
   Phase-1 results (``got``);
@@ -74,7 +76,7 @@ from data_check_spark.operators.rowdiff import (
     pk_census,
     row_diff,
 )
-from data_check_spark.operators.sketch import merge_tdigest, partition_tdigest
+from data_check_spark.operators.sketch import TDIGEST_SCHEMA, merge_tdigest, partition_tdigest
 from data_check_spark.operators.stats import (
     exact_distinct_counts,
     partition_stats_pass,
@@ -119,6 +121,7 @@ class Run:
     reference_df: DataFrame | None = None
     reference_profile: DataFrame | None = None
     reference_digest: DataFrame | None = None
+    # persisted frames and broadcasts, released by SuiteResult.unpersist()
     cached: list = field(default_factory=list)
     # the fused groupBy(partition) stats pass: the first StatsCheck's
     # thresholds, ExprCheck predicates, fingerprint columns, numeric
@@ -172,25 +175,29 @@ class Run:
             # partition list and the lineage all read these rows.
             # persist() here was measured strictly worse (44s cache
             # build vs 31s collect at local[32]/20M pages)
-            src = partition_stats_pass(
-                self.df, self.part, st.thresholds if st else {},
-                st.approx if st else True, self.hists,
-                exact_distinct=st.exact_distinct if st else (),
-                expr_counts=self.exprs, fingerprint_cols=self.fingerprint,
-            )
-            acts["pass"] = lambda: [r.asDict(recursive=True) for r in src.collect()]
+            def stats_pass():
+                src = partition_stats_pass(
+                    self.df, self.part, st.thresholds if st else {},
+                    st.approx if st else True, self.hists,
+                    exact_distinct=st.exact_distinct if st else (),
+                    expr_counts=self.exprs, fingerprint_cols=self.fingerprint,
+                )
+                return [r.asDict(recursive=True) for r in src.collect()]
+
+            acts["pass"] = stats_pass
             if st and st.exact_distinct:
                 acts["exact"] = lambda: exact_distinct_counts(
                     self.df, self.part, st.exact_distinct
                 )
         elif self.needs_parts:
-            parts = self.df.select(self.part).distinct()
-            acts["parts"] = lambda: [r[0] for r in parts.collect()]
+            acts["parts"] = lambda: [
+                r[0] for r in self.df.select(self.part).distinct().collect()
+            ]
         # the numeric df-side histograms ride the stats pass when it
         # runs; the profile scan then reads only the categorical columns
         hists = {} if in_pass else self.hists
         if self.cats or hists:
-            acts["prof_df"] = drift_profile(self.df, self.cats, hists).collect
+            acts["prof_df"] = lambda: drift_profile(self.df, self.cats, hists).collect()
         if self.ref_cats or self.hists:
             if self.reference_df is None and self.reference_profile is None:
                 raise ValueError(
@@ -201,12 +208,14 @@ class Run:
                 # a stored profile stands in for the reference scan:
                 # |categories|+|buckets| audit rows, not the reference
                 # version's data
-                acts["prof_ref"] = self.reference_profile.select("kind", "key", "freq").collect
+                acts["prof_ref"] = lambda: self.reference_profile.select(
+                    "kind", "key", "freq"
+                ).collect()
             else:
                 # the reference side scans only the DRIFT columns
-                acts["prof_ref"] = drift_profile(
+                acts["prof_ref"] = lambda: drift_profile(
                     self.reference_df, self.ref_cats, self.hists
-                ).collect
+                ).collect()
         return acts
 
     def absorb(self, got: dict) -> None:
@@ -266,7 +275,11 @@ class Run:
     def digest_frame(self) -> DataFrame | None:
         if not self.digests:
             return None
-        return self.spark.createDataFrame(pd.concat(self.digests, ignore_index=True))
+        return local_frame(
+            self.spark,
+            list(pd.concat(self.digests, ignore_index=True).itertuples(index=False, name=None)),
+            "kind string, " + TDIGEST_SCHEMA,
+        )
 
     def psi(self, kind: str) -> float:
         """PSI of one fused profile kind, epsilon-floored, 6 dp."""
@@ -343,8 +356,10 @@ class StatsCheck(Check):
     def plan(self, run):
         if run.stats is self:
             return {}
-        src = partition_stats_pass(run.df, run.part, self.thresholds, self.approx)
-        return {"pass": lambda: [r.asDict(recursive=True) for r in src.collect()]}
+        return {"pass": lambda: [
+            r.asDict(recursive=True)
+            for r in partition_stats_pass(run.df, run.part, self.thresholds, self.approx).collect()
+        ]}
 
     def verdict_rows(self, run, got):
         return stats_verdict_rows(got.get("pass", run.pass_rows), self.thresholds)
@@ -395,8 +410,10 @@ class UniquenessCheck(Check):
         run.needs_parts = True
 
     def plan(self, run):
-        dups = duplicate_keys(run.df, self.key, run.part, self.broadcast_candidates)
-        return {"viol": lambda: run.census(dups, F.count(F.lit(1)))}
+        return {"viol": lambda: run.census(
+            duplicate_keys(run.df, self.key, run.part, self.broadcast_candidates),
+            F.count(F.lit(1)),
+        )}
 
     def verdict_rows(self, run, got):
         return run.per_partition(got["viol"][1], self.key, "unique", self.max_duplicate_keys)
@@ -439,10 +456,12 @@ class FunctionalDependencyCheck(Check):
         run.needs_parts = True
 
     def plan(self, run):
-        viol = fd_violating_keys(
-            run.df, self.determinant, self.dependents, run.part, self.broadcast_candidates
-        )
-        return {"viol": lambda: run.census(viol, F.count(F.lit(1)))}
+        return {"viol": lambda: run.census(
+            fd_violating_keys(
+                run.df, self.determinant, self.dependents, run.part, self.broadcast_candidates
+            ),
+            F.count(F.lit(1)),
+        )}
 
     def verdict_rows(self, run, got):
         return run.per_partition(got["viol"][1], self.determinant, "fd", self.max_violating_keys)
@@ -504,7 +523,9 @@ class ReferentialCheck(Check):
             bloom = KeyBloom.load(self.bloom_path)
         else:
             bloom = build_key_bloom(dim, self.dim_key, self.fpp)
-        return bloom_missing_keys(run.df, fk, bloom_member_probe(run.spark, bloom), run.part)
+        member = bloom_member_probe(run.spark, bloom)
+        run.cached.append(member.broadcast)  # destroyed by SuiteResult.unpersist()
+        return bloom_missing_keys(run.df, fk, member, run.part)
 
     def plan(self, run):
         return {"viol": lambda: run.census(self._per_key(run), F.sum("n"))}
@@ -534,8 +555,9 @@ class CategoricalDriftCheck(Check):
     def plan(self, run):
         if self.reference is None:
             return {}
-        psi = psi_categorical(run.df, self.reference(run.spark), self.column)
-        return {"psi": lambda: psi.first()["psi"]}
+        return {"psi": lambda: psi_categorical(
+            run.df, self.reference(run.spark), self.column
+        ).first()["psi"]}
 
     def verdict_rows(self, run, got):
         psi = run.psi(self.column) if self.reference is None else got["psi"]
@@ -576,10 +598,9 @@ class NumericDriftCheck(_FusedHistogram):
     def plan(self, run):
         if self.reference is None:
             return {}
-        psi = psi_numeric(
+        return {"psi": lambda: psi_numeric(
             run.df, self.reference(run.spark), self.expr(), self.lo, self.hi, self.n_buckets
-        )
-        return {"psi": lambda: psi.first()["psi"]}
+        ).first()["psi"]}
 
     def verdict_rows(self, run, got):
         psi = run.psi(self.name) if self.reference is None else got["psi"]
@@ -606,10 +627,9 @@ class KSDriftCheck(_FusedHistogram):
     def plan(self, run):
         if self.reference is None:
             return {}
-        ks = ks_statistic(
+        return {"ks": lambda: ks_statistic(
             run.df, self.reference(run.spark), self.expr(), self.lo, self.hi, self.n_buckets
-        )
-        return {"ks": lambda: ks.first()["ks"]}
+        ).first()["ks"]}
 
     def verdict_rows(self, run, got):
         if self.reference is not None:
@@ -668,15 +688,21 @@ class KSDigestDriftCheck(Check):
             # stored baseline: ≤ ~2δ audit rows, the reference version
             # is never rescanned; a missing kind reads as an empty
             # digest → NULL stat → fails closed
-            ref = run.reference_digest.filter(F.col("kind") == self.name).drop("kind")
+            def ref_side():
+                return run.reference_digest.filter(F.col("kind") == self.name).drop("kind")
         else:
             ref = self.reference(run.spark) if self.reference else run.reference_df
             if ref is None:
                 raise ValueError(f"drift check {self.name}: no reference table or digest")
-            ref = self.digest(ref)
+
+            def ref_side():
+                return self.digest(ref)
         # df side: ONE collect serves the readout AND the persistable
         # drift_digests rows
-        return {"df": self.digest(run.df).toPandas, "ref": ref.toPandas}
+        return {
+            "df": lambda: self.digest(run.df).toPandas(),
+            "ref": lambda: ref_side().toPandas(),
+        }
 
     def verdict_rows(self, run, got):
         if len(got["df"]):
@@ -951,8 +977,10 @@ class NearDupCheck(Check):
             viol = local_frame(run.spark, rows, cluster_schema(e.schema["u"].dataType))
             return len(labels), len({c for _, c in labels}), viol
 
-        total = run.df.agg(F.count(F.col(self.id_col)))
-        return {"nd": clusters, "total": lambda: total.first()[0]}
+        return {
+            "nd": clusters,
+            "total": lambda: run.df.agg(F.count(F.col(self.id_col))).first()[0],
+        }
 
     def verdict_rows(self, run, got):
         nodes, comps, _ = got["nd"]
@@ -1285,11 +1313,13 @@ class CompareCheck(Check):
         ref = self.reference(run.spark) if self.reference else run.reference_df
         if ref is None:
             raise ValueError(f"compare check {self.name}: no reference table")
-        ratios = column_match_ratios(
-            run.df, ref, self.pk, columns=self.columns, reference_mode=self.reference_mode
-        )
-        return {"ref": ref, "census": pk_census(run.df, ref, self.pk).collect,
-                "ratios": ratios.collect}
+        return {
+            "ref": ref,
+            "census": lambda: pk_census(run.df, ref, self.pk).collect(),
+            "ratios": lambda: column_match_ratios(
+                run.df, ref, self.pk, columns=self.columns, reference_mode=self.reference_mode
+            ).collect(),
+        }
 
     def verdict_rows(self, run, got):
         c0 = got["census"][0] if got["census"] else None

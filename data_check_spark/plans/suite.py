@@ -20,9 +20,12 @@ tuples, and its lazy violation frames. Adding a check kind means
 writing one class; ``run()`` is one planner plus one loop:
 
 1. plan — reject unknown check types, gather every check's share of
-   the fused passes, guard duplicate keys. No Spark job runs yet.
+   the fused passes, guard duplicate keys. No Spark job runs and no
+   Phase-1 frame is built yet.
 2. Phase 1 — submit the shared passes' and every check's bounded
-   actions to one thread pool, so their job latencies overlap.
+   actions to one thread pool. Each action builds its frame and then
+   collects it, so the plans' analysis overlaps on the pool threads
+   as their job latencies do.
 3. Phase 2 — each check turns the collected results into verdict rows
    in plain Python. The rows are sorted by (partition, check, column)
    with None first (Spark's ascending order) and returned as one local
@@ -44,6 +47,7 @@ from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import reduce
 
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,7 +90,7 @@ class SuiteResult:
     run_id: str
     verdicts: DataFrame
     violations: dict[str, DataFrame]
-    cached: list[DataFrame] = field(default_factory=list)
+    cached: list = field(default_factory=list)  # frames and broadcasts
     # per-partition (n_rows, fp_lo, fp_hi) when a FingerprintCheck ran
     fingerprints: DataFrame | None = None
     # (kind, key, freq) rows of THIS table's fused drift profile, when
@@ -105,11 +109,17 @@ class SuiteResult:
         return self.verdicts.filter(~F.coalesce(F.col("passed"), F.lit(False))).isEmpty()
 
     def unpersist(self) -> None:
-        """Release the small intermediate frames run() persisted (call
-        after verdicts/violations are consumed — they leak in a
-        long-lived session otherwise)."""
-        for df in self.cached:
-            df.unpersist()
+        """Release the small intermediate frames run() persisted and
+        the broadcasts it made (call after verdicts/violations are
+        consumed: the lazy violation frames still read them, and they
+        leak in a long-lived session otherwise). A second call releases
+        nothing: a broadcast cannot be destroyed twice."""
+        for held in self.cached:
+            if isinstance(held, Broadcast):
+                held.destroy()  # also deletes its driver-side file
+            else:
+                held.unpersist()
+        self.cached.clear()
 
 
 @dataclass

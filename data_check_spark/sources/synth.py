@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_check_spark.session import local_frame
+
 SEED = 42
 N_LANGS = 20
 LANGS = [
@@ -215,11 +217,11 @@ def synth_domains(spark: SparkSession) -> DataFrame:
         for i in range(N_COLD_DOMAINS)
         if i % 10 != 4
     ]
-    # a LocalRelation, not a range→filter→union plan: the dimension is
-    # 4.5k rows — building it with Spark jobs cost a measured fixed
-    # ~3-5s per suite run (two jobs + broadcast exchange each time);
-    # a local relation broadcasts directly with zero jobs
-    return spark.createDataFrame(rows, "domain string, tier string")
+    # an Arrow LocalRelation: Catalyst sizes it (rows × row width,
+    # ≈216 KB), so refint.maybe_broadcast hints the broadcast without
+    # its row-probe job, and no Python worker starts. A Python-list
+    # createDataFrame would plan a LogicalRDD of unknown size instead
+    return local_frame(spark, rows, "domain string, tier string")
 
 
 def domain_of(url: Column) -> Column:

@@ -289,3 +289,27 @@ def test_suite_bloom_path(spark, tmp_path):
     v2 = sorted(map(tuple, r_stored.violations["refint:dom"].collect()))
     assert v1 == v2
     r_inline.unpersist(); r_stored.unpersist()
+
+
+def test_bloom_suite_unpersist_destroys_the_broadcast(spark, frames):
+    """A bloom-mode ReferentialCheck broadcasts its bitmap once per
+    call; SuiteResult.unpersist() destroys it, so repeated calls in one
+    session leave no broadcast file behind on the driver."""
+    import os
+
+    from data_check_spark.plans.suite import CheckSuite, ReferentialCheck
+
+    fact, dim = frames
+    fact = fact.withColumn("part", (F.col("row_id") % 3).cast("string"))
+    bloom = build_key_bloom(dim, "url", fpp=1e-3)
+    suite = CheckSuite([
+        ReferentialCheck("bloom_ref", "page_url", lambda s: dim, "url", mode="bloom", bloom=bloom)
+    ])
+    temp_dir = spark.sparkContext._temp_dir
+    before = len(os.listdir(temp_dir))
+    for _ in range(3):
+        res = suite.run(spark, fact, "part")
+        assert res.verdicts.collect()
+        assert res.violations["refint:bloom_ref"].count() > 0
+        res.unpersist()
+    assert len(os.listdir(temp_dir)) == before

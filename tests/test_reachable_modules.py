@@ -118,3 +118,26 @@ def test_every_public_definition_is_used():
             if not outside:
                 dead.append(f"{_dotted(path)}.{node.name}")
     assert not dead, f"public definitions nothing uses: {dead}"
+
+
+def test_driver_rows_become_local_relations():
+    """Rows the driver holds become a frame through
+    ``session.local_frame`` only: an Arrow ``LocalRelation`` that
+    Catalyst can size and that collects and joins without a Spark job.
+    A ``createDataFrame`` over a Python list or a pandas frame plans a
+    ``LogicalRDD`` instead, whose first action runs a job and forks
+    Python workers. A site whose schema Arrow cannot carry would be
+    named here with its reason; there is none."""
+    sites = []
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        if path == ROOT / PKG / "session.py":
+            # the one sanctioned call, on the pyarrow.Table it builds
+            tree.body = [n for n in tree.body if getattr(n, "name", None) != "local_frame"]
+        sites += [
+            f"{path.relative_to(ROOT)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ]
+    assert not sites, f"createDataFrame outside session.local_frame: {sites}"

@@ -1229,3 +1229,42 @@ def test_verdict_relation_is_local(spark, tmp_path):
     observed, obs = osuite.attach(df)
     observed.write.format("noop").mode("overwrite").save()
     _assert_local_relation(spark, osuite.verdicts(spark, obs))
+
+
+def test_phase1_frames_are_built_on_pool_threads(spark, pages, monkeypatch):
+    """The caller thread builds no Phase-1 frame: each Phase-1 action
+    builds the frame it collects, so the plans' analysis runs on the
+    suite's pool threads (the validate benchmark's suite shape)."""
+    import threading
+
+    from data_check_spark.plans import checks
+    from data_check_spark.plans.suite import CompareCheck, FunctionalDependencyCheck
+    from data_check_spark.runner import default_pages_suite
+
+    builders = (
+        "partition_stats_pass", "drift_profile", "duplicate_keys",
+        "fd_violating_keys", "pk_census", "column_match_ratios",
+    )
+    threads: dict[str, list] = {}
+
+    def recording(name, real):
+        def build(*args, **kwargs):
+            threads.setdefault(name, []).append(threading.current_thread())
+            return real(*args, **kwargs)
+        return build
+
+    for name in builders:
+        monkeypatch.setattr(checks, name, recording(name, getattr(checks, name)))
+    s = CheckSuite(
+        default_pages_suite(with_drift=True).checks
+        + [
+            CompareCheck("diff", pk="url", columns=["text", "lang"]),
+            FunctionalDependencyCheck("url", ("text",)),
+        ]
+    )
+    res = s.run(spark, pages, "warc_day", reference_df=synth_pages_v2(spark, N))
+    res.unpersist()
+    assert sorted(threads) == sorted(builders)
+    caller = threading.current_thread()
+    on_caller = sorted(n for n, ts in threads.items() if caller in ts)
+    assert not on_caller, f"built on the caller thread: {on_caller}"

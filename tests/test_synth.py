@@ -88,3 +88,22 @@ def test_domains_dim(spark, pages):
         .count()
     )
     assert missing > 0  # held-out dim slice produces violations
+
+
+def test_domains_dim_broadcasts_without_a_job(spark):
+    """The dimension snapshot is an Arrow LocalRelation that Catalyst
+    can size, so ``maybe_broadcast`` hints the broadcast without its
+    row-probe job (a Python-list createDataFrame plans a LogicalRDD of
+    unknown size, which takes the probe)."""
+    from data_check_spark.operators.refint import maybe_broadcast, plan_size_estimate
+
+    dim = synth_domains(spark)
+    assert dim._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    assert plan_size_estimate(dim) is not None
+    keys = dim.select(F.col("domain").alias("_dk")).dropDuplicates()
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    maybe_broadcast(keys)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
