@@ -145,6 +145,9 @@ class Run:
     digests: list = field(default_factory=list)  # pandas digest frames
 
     def persist(self, frame: DataFrame) -> DataFrame:
+        # AQE sizes the cache from runtime statistics only under the
+        # session's CACHED_PLAN_AQE (session.py); without it a small
+        # frame caches at the full shuffle width
         frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
         self.cached.append(frame)  # released by SuiteResult.unpersist()
         return frame
@@ -152,7 +155,10 @@ class Run:
     def census(self, frame: DataFrame, agg: Column) -> tuple[DataFrame, dict]:
         """Persist one per-key violation frame and aggregate it per
         partition — the action that materializes it. The violation
-        dump later rereads the cache."""
+        dump later rereads the cache. Under CACHED_PLAN_AQE a small
+        census caches as few partitions and loses its hash
+        partitioning; both readers, this groupBy(partition) and the
+        dump's orderBy, shuffle anyway."""
         frame = self.persist(frame)
         return frame, {r[0]: r[1] for r in frame.groupBy("partition").agg(agg).collect()}
 

@@ -17,7 +17,9 @@ from __future__ import annotations
 
 import argparse
 import sys
+from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,6 +32,7 @@ from data_check_spark.plans.suite import (
     StatsCheck,
     UniquenessCheck,
 )
+from data_check_spark.session import CACHED_PLAN_AQE
 from data_check_spark.sources.synth import domain_of, synth_domains, synth_pages, synth_pages_v2
 
 
@@ -191,6 +194,26 @@ def _stage_complete(spark: SparkSession, *paths: str) -> bool:
         if not p.getFileSystem(conf).exists(p):
             return False
     return True
+
+
+# what spark.read.parquet raises for an audit table with nothing
+# stored yet: the directory is missing, or it holds no files
+_NOTHING_STORED = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def _stored(read: Callable):
+    """``read()`` of an audit table, or None when nothing is stored
+    there yet (a first run bootstraps it). Any other failure, such as a
+    corrupt file, propagates: running on without the stored baseline
+    would drop its gate silently."""
+    try:
+        return read()
+    except ValueError:  # latest_run: the table holds no rows
+        return None
+    except AnalysisException as e:
+        if e.getCondition() in _NOTHING_STORED:
+            return None
+        raise
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -461,7 +484,13 @@ def main(argv: list[str] | None = None) -> int:
             ap.error(f"--lm-gate must be LO:HI:FRAC, got {args.lm_gate!r}")
         lm_gate = (lo, hi, frac)
 
-    spark = SparkSession.builder.appName("data-check-spark-runner").getOrCreate()
+    # spark-submit supplies master and shuffle width; getOrCreate also
+    # applies CACHED_PLAN_AQE to a session that already exists
+    spark = (
+        SparkSession.builder.appName("data-check-spark-runner")
+        .config(map=CACHED_PLAN_AQE)
+        .getOrCreate()
+    )
 
     if args.data:
         df: DataFrame = spark.read.parquet(args.data)
@@ -482,14 +511,11 @@ def main(argv: list[str] | None = None) -> int:
     if args.drift_from_audit:
         from data_check_spark.plans.suite import drift_profile_from_audit
 
-        try:
-            ref_profile = drift_profile_from_audit(
-                spark, f"{args.out}/audit/drift_profiles"
-            )
-        except Exception:
-            # first version: nothing stored yet — run without drift
-            # verdicts and bootstrap the profile below
-            ref_profile = None
+        # first version: nothing stored yet — run without drift
+        # verdicts and bootstrap the profile below
+        ref_profile = _stored(
+            lambda: drift_profile_from_audit(spark, f"{args.out}/audit/drift_profiles")
+        )
     suite = default_pages_suite(
         with_drift=ref is not None or ref_profile is not None,
         with_repetition=args.repetition_gate,
@@ -512,22 +538,22 @@ def main(argv: list[str] | None = None) -> int:
             suite_from_suggestions,
         )
 
-        try:
-            stored = suggestions_from_audit(spark, f"{args.out}/audit")
+        stored = _stored(lambda: suggestions_from_audit(spark, f"{args.out}/audit"))
+        if stored is None:
+            print("no stored suggestions yet — running the default suite")
+        else:
             suite = suite_from_suggestions(stored)
             print("suite assembled from stored suggestions")
-        except Exception:
-            print("no stored suggestions yet — running the default suite")
     if args.schema_from_audit:
         from data_check_spark.plans.suite import SchemaCheck, schema_from_audit
 
-        try:
-            expected = schema_from_audit(spark, f"{args.out}/audit/schemas")
+        expected = _stored(lambda: schema_from_audit(spark, f"{args.out}/audit/schemas"))
+        if expected is None:
+            print("no stored schema yet — this run bootstraps it")
+        else:
             suite = CheckSuite(
                 [SchemaCheck(expected=expected, exact=True)] + suite.checks
             )
-        except Exception:
-            print("no stored schema yet — this run bootstraps it")
     if "warc_day" not in df.columns:
         df = df.withColumn("warc_day", F.to_date("warc_ts"))
     result = suite.run_resumable(

@@ -12,6 +12,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
 
+# Lets AQE plan the frames the engine persists (Run.persist/census):
+# Spark otherwise builds every cached plan with AQE off, at the full
+# configured shuffle width, and CacheManager reads this when persist()
+# is called, so it is a session setting, not a per-call one. With it,
+# a key census of a few hundred rows caches as one partition and a
+# large one keeps up to the configured width. The cost: a reader that needed the cache's
+# output partitioning may need one more shuffle. The census readers
+# (groupBy(partition), orderBy) shuffle anyway. get_spark and the
+# spark-submit runner's builder both apply it.
+CACHED_PLAN_AQE = {"spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true"}
+
 
 def get_spark(
     app_name: str = "data-check-spark",
@@ -19,11 +30,14 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+    """Build (or fetch) a local SparkSession: the tests, perfbench
+    and ``scripts/`` use it.
 
     master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default all
-    cores) in the sandbox; on a cluster the caller passes nothing and
-    spark-submit supplies the master.
+    cores). ``runner.py`` does not call it: builder options override
+    spark-submit's, so this would replace the cluster's ``--master``
+    with ``local[…]`` and pin its shuffle width to 32. The runner's
+    builder takes only ``CACHED_PLAN_AQE`` from here.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -39,6 +53,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(map=CACHED_PLAN_AQE)
         # Arrow transfer for pandas UDFs / toPandas at the report edge.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Broadcast threshold: dimension snapshots below this go broadcast.

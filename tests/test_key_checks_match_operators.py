@@ -15,6 +15,7 @@ span partitions.
 import random
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_check_spark.operators.bloom import build_key_bloom, referential_violations_bloom
@@ -123,5 +124,27 @@ def test_check_agrees_with_its_operator(spark, table, dim, bloom, case):
         # violations, and so does a NULL key somewhere
         assert any(r["partition"] is None for r in viol)
         assert any(r.get("key_value", r.get("ref_key")) is None for r in viol)
+    finally:
+        res.unpersist()
+
+
+def test_key_check_caches_are_sized_by_aqe(spark, table, dim):
+    """The session lets AQE plan persisted frames
+    (``session.CACHED_PLAN_AQE``), so each key check's census, a few
+    hundred rows here, caches as fewer partitions than the configured
+    shuffle width. Spark's default plans cached frames with AQE off,
+    and every census then caches at the full width."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    suite = CheckSuite([
+        UniquenessCheck("k"),
+        FunctionalDependencyCheck("k", ("t",)),
+        _refint(dim),
+    ])
+    res = suite.run(spark, table, "day")
+    try:
+        frames = [c for c in res.cached if isinstance(c, DataFrame)]
+        assert len(frames) == 3
+        for frame in frames:
+            assert frame.rdd.getNumPartitions() < width
     finally:
         res.unpersist()

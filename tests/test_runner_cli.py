@@ -1,10 +1,13 @@
 """End-to-end test of the spark-submit entry point's main() — the
 north rule's submission surface — including the --neardup-gate flag."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from data_check_spark.runner import main
+from data_check_spark.session import CACHED_PLAN_AQE
 
 
 def test_runner_synthesize_with_neardup_gate(spark, tmp_path):
@@ -313,3 +316,50 @@ def test_runner_extract_check(spark, tmp_path):
     assert len(inv2) > 0 and not any(r["passed"] for r in inv2)
     viol = spark.read.parquet(f"{out2}/audit/violations/expr_html_text_invariant")
     assert viol.count() > 0
+
+
+def test_runner_session_lets_aqe_plan_cached_frames(spark, tmp_path):
+    """The runner builds its own session (spark-submit supplies the
+    master), so it applies ``session.CACHED_PLAN_AQE`` itself — to an
+    existing session too."""
+    (key, value), = CACHED_PLAN_AQE.items()
+    spark.conf.set(key, "false")
+    try:
+        main(["--synthesize", "300", "--out", str(tmp_path / "run"),
+              "--partitions", "2"])
+        assert spark.conf.get(key) == value
+    finally:
+        spark.conf.set(key, value)
+
+
+def _empty_schema_table(spark, path):
+    spark.createDataFrame([], "column string, dtype string, run_id string, audit_kind string, "
+                          "audit_ts timestamp").write.parquet(path)
+
+
+@pytest.mark.parametrize("stored", [
+    None,  # no directory
+    lambda spark, path: os.makedirs(path),  # a directory without files
+    _empty_schema_table,  # an audit table without rows
+])
+def test_runner_schema_from_audit_bootstraps_when_nothing_is_stored(
+    spark, tmp_path, capsys, stored
+):
+    out = str(tmp_path / "run")
+    if stored:
+        stored(spark, f"{out}/audit/schemas")
+    rc = main(["--synthesize", "300", "--out", out, "--partitions", "2",
+               "--schema-from-audit"])
+    assert rc in (0, 1)
+    assert "no stored schema yet" in capsys.readouterr().out
+
+
+def test_runner_schema_from_audit_propagates_a_corrupt_table(tmp_path):
+    """An unreadable stored schema fails the run: running on without
+    the schema gate would pass a table the gate was meant to check."""
+    schemas = tmp_path / "run" / "audit" / "schemas"
+    schemas.mkdir(parents=True)
+    (schemas / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        main(["--synthesize", "300", "--out", str(tmp_path / "run"),
+              "--partitions", "2", "--schema-from-audit"])

@@ -1268,3 +1268,37 @@ def test_phase1_frames_are_built_on_pool_threads(spark, pages, monkeypatch):
     caller = threading.current_thread()
     on_caller = sorted(n for n, ts in threads.items() if caller in ts)
     assert not on_caller, f"built on the caller thread: {on_caller}"
+
+
+def test_unpersist_releases_every_persisted_frame(spark, pages):
+    """Three ``validate``-shaped calls (the default pages suite with
+    drift, a CompareCheck and an FD check), each with its verdicts
+    collected, every violation frame forced and ``unpersist()``: no
+    RDD the calls persisted is left behind, whatever partitioning AQE
+    gave the caches. Covers persisted frames only: the eager
+    ``localCheckpoint``s of ``minhash_lsh_pairs`` and
+    ``bigram_lm_scores`` (NearDupCheck, LMCheck, not in this suite) are
+    not registered on the Run and stay open after ``unpersist()``."""
+    from data_check_spark.plans.suite import CompareCheck, FunctionalDependencyCheck
+    from data_check_spark.runner import default_pages_suite
+
+    suite = CheckSuite(default_pages_suite(with_drift=True).checks + [
+        CompareCheck("diff", pk="url", columns=["text", "lang"],
+                     max_missing_ratio=0.05, min_ratio_equal=0.9),
+        FunctionalDependencyCheck("url", ("text",)),
+    ])
+    ref = synth_pages_v2(spark, N)
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    pages.count()  # the module's cached input is not the calls' to release
+    before = persisted()
+    for _ in range(3):
+        res = suite.run(spark, pages, "warc_day", reference_df=ref)
+        res.verdicts.collect()
+        for viol in res.violations.values():
+            viol.write.format("noop").mode("overwrite").save()
+        assert persisted() - before  # the call did persist its censuses
+        res.unpersist()
+        assert persisted() - before == set()
